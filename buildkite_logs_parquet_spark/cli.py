@@ -19,7 +19,6 @@ import sys
 import time
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def _fmt_ts_ms(ms: int) -> str:
@@ -127,7 +126,8 @@ def cmd_parse(args: argparse.Namespace) -> int:
             _entries_text(rows, show_group=args.show_group, strip=args.strip_ansi)
     if args.summary:
         s = processing_summary(entries_view(parsed)).first()
-        err = parsed.where(F.col("parse_error").isNotNull()).count()
+        # every raw line is either an entry or quarantined
+        err = sum(stats.values()) - s["total_entries"]
         print("\n--- Processing Summary ---", file=sys.stderr)
         print(f"Total entries: {s['total_entries']}", file=sys.stderr)
         print(f"Entries with timestamps: {s['entries_with_time']}", file=sys.stderr)

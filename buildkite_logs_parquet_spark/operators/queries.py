@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from buildkite_logs_parquet_spark.operators.ingest import NO_TIMESTAMP_SENTINEL_MS
+
 #: empty group placeholder, reference query_cli.go:66-68 / query.go:343-346
 NO_GROUP = "<no group>"
 
@@ -25,7 +27,11 @@ def list_groups(entries: DataFrame, as_timestamp: bool = True) -> DataFrame:
     (min/max entry time — entries without timestamps participate with the
     year-1 sentinel ``ingest.NO_TIMESTAMP_SENTINEL_MS``, matching the
     reference which folds the Go zero ``time.Time`` of such entries into
-    min/max), command count, progress count.
+    min/max), command count, progress count.  The ``_ms`` columns of
+    ``as_timestamp=False`` keep that sentinel for parity; the
+    ``first_seen`` / ``last_seen`` timestamps of ``as_timestamp=True`` map
+    it to NULL, since ``collect()`` cannot turn the year-1 instant into a
+    Python ``datetime`` (``ValueError: year 0 is out of range``).
 
     Spark plan: hash aggregate with map-side partial aggregation, then a
     (small) sort — the reference's O(n^2) bubble sort (query_cli.go:107-114)
@@ -45,11 +51,15 @@ def list_groups(entries: DataFrame, as_timestamp: bool = True) -> DataFrame:
         .orderBy("first_seen_ms", "name")
     )
     if as_timestamp:
-        out = out.withColumn(
-            "first_seen", F.timestamp_millis(F.col("first_seen_ms"))
-        ).withColumn("last_seen", F.timestamp_millis(F.col("last_seen_ms")))
+        def seen(ms: str) -> F.Column:
+            return F.when(
+                F.col(ms) != NO_TIMESTAMP_SENTINEL_MS, F.timestamp_millis(F.col(ms))
+            )
+
+        first, last = seen("first_seen_ms"), seen("last_seen_ms")
         out = out.select(
-            "name", "entry_count", "first_seen", "last_seen", "commands", "progress"
+            "name", "entry_count", first.alias("first_seen"),
+            last.alias("last_seen"), "commands", "progress",
         )
     return out
 

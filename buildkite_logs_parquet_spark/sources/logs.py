@@ -31,7 +31,6 @@ _LINES_SCHEMA = T.StructType(
 def read_log_lines(
     spark: SparkSession,
     path: str | list[str],
-    min_partitions: int | None = None,
     stats_out: dict | None = None,
 ) -> DataFrame:
     """Read raw log file(s) into ``(file, line_no, raw)`` with a stable
@@ -55,21 +54,7 @@ def read_log_lines(
     (``max − min + 1 == count``) and fails loudly if a Spark upgrade ever
     changes the id layout, rather than silently misnumbering lines.
     """
-    reader = spark.read.option("lineSep", "\n")
-    restore = None
-    if min_partitions and min_partitions > 1:
-        paths = [path] if isinstance(path, str) else list(path)
-        local = [p[7:] if p.startswith("file://") else p for p in paths]
-        sizes = [os.path.getsize(p) for p in local if os.path.isfile(p)]
-        if sizes:
-            target = max(sum(sizes) // min_partitions, 1 << 20)
-            restore = spark.conf.get("spark.sql.files.maxPartitionBytes")
-            spark.conf.set("spark.sql.files.maxPartitionBytes", str(target))
-    try:
-        text = reader.text(path)
-    finally:
-        if restore is not None:
-            spark.conf.set("spark.sql.files.maxPartitionBytes", restore)
+    text = spark.read.option("lineSep", "\n").text(path)
 
     tagged = text.select(
         F.input_file_name().alias("file"),

@@ -3,12 +3,12 @@
 Write side (reference parquet.go:101-341): zstd compression, 7-column
 schema.  The reference *declares* Parquet sorting columns (timestamp, group)
 but physically writes rows in file order (parquet.go:124-127 sets metadata
-only; records are appended in arrival order) — positional ops (tail/seek)
-depend on that.  We therefore keep rows physically ordered by ``row_id``
-and rely on row-group min/max stats on ``row_id`` for positional pruning;
-``row_id`` rides along as an extra column, which the reference reader
-tolerates by design (it ignores unknown columns, query.go:203-233 — its own
-testdata has a legacy 8th column).
+only) — positional ops (tail/seek) depend on that.  Each write task sorts
+its partition by ``row_id`` and rolls part-files over in that order, so
+every file covers a contiguous ``row_id`` range per log and row-group
+min/max stats prune seek/tail.  ``row_id`` rides along as an extra column,
+which the reference reader tolerates (it ignores unknown columns,
+query.go:203-233 — its own testdata has a legacy 8th column).
 
 Read side: tolerant, name-based resolution (query.go:203-233):
 ``timestamp`` and ``content`` required; ``group`` defaults to ``""``;
@@ -38,30 +38,29 @@ def write_entries(
     single_file: bool = False,
     target_rows_per_partition: int = 4_000_000,
 ) -> None:
-    """Write canonical entries (+ ``row_id``) as zstd Parquet.
+    """Write canonical entries (+ ``row_id``) as zstd Parquet in one job.
 
     ``filter_expr`` mirrors the reference's filtered export
     (parquet.go:290-341): a Column predicate or SQL string applied before
-    the write.  ``single_file=True`` gives byte-level parity-style output
-    for small job logs; the default range-partitions on ``row_id`` so huge
-    logs write in parallel while keeping positional locality (each output
-    file covers a contiguous row range → row-group & file pruning for
-    seek/tail).
+    the write.  ``single_file=True`` gives parity-style single-file output
+    for small job logs.  The default adds no count and no shuffle: it keeps
+    the ingest plan's per-log, position-ordered partitions, sorts each by
+    ``row_id``, and caps every part-file at ``target_rows_per_partition``
+    rows (the writer's ``maxRecordsPerFile``).
     """
     df = entries
     if filter_expr is not None:
         df = df.where(filter_expr)
     cols = (["row_id"] if "row_id" in df.columns else []) + CANONICAL_COLUMNS
     df = df.select(*cols)
-    if "row_id" in df.columns:
-        if single_file:
-            df = df.coalesce(1).sortWithinPartitions("row_id")
-        else:
-            n = max(1, df.count() // target_rows_per_partition)
-            df = df.repartitionByRange(n, "row_id").sortWithinPartitions("row_id")
-    elif single_file:
+    if single_file:
         df = df.coalesce(1)
-    df.write.mode("overwrite").option("compression", "zstd").parquet(path)
+    if "row_id" in df.columns:
+        df = df.sortWithinPartitions("row_id")
+    # maxRecordsPerFile 0 = no cap: single_file stays one file at any size
+    df.write.mode("overwrite").option("compression", "zstd").option(
+        "maxRecordsPerFile", 0 if single_file else target_rows_per_partition
+    ).parquet(path)
 
 
 def _attach_positional_row_id(df: DataFrame) -> DataFrame:

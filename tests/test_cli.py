@@ -77,3 +77,46 @@ def test_parse_requires_exactly_one_source(spark, capsys):
         main(["parse", "-file", "x.log", "-org", "o", "-pipeline", "p", "-build", "1", "-job", "j"])
         == 2
     )
+
+
+OSC = "\x1b_bk;t="
+BEL = "\x07"
+
+
+@pytest.mark.parametrize("partitioned", [False, True])
+def test_parse_summary_counts_quarantined_lines(spark, tmp_path, capsys, partitioned):
+    """``parse -output -summary`` on a generated log with one
+    invalid-timestamp line: the printed totals cover the six entries, the
+    quarantine line counts the seventh raw line, and the written Parquet
+    holds exactly the entries."""
+    from buildkite_logs_parquet_spark.sources.parquet_io import read_entries
+
+    log = tmp_path / "job.log"
+    log.write_text(
+        f"{OSC}1000{BEL}~~~ Setup\n"
+        f"{OSC}1001{BEL}$ make\n"
+        "plain output\n"
+        f"{OSC}12ab{BEL}bad timestamp\n"
+        f"{OSC}1003{BEL}--- Build\n"
+        f"{OSC}1004{BEL}$ make test\n"
+        f"{OSC}1005{BEL}done\n"
+    )
+    out = str(tmp_path / "parsed.parquet")
+    argv = ["parse", "-file", str(log), "-output", out, "-summary"]
+    assert main(argv + (["-partitioned"] if partitioned else [])) == 0
+    err = capsys.readouterr().err
+    for want in (
+        "Total entries: 6",
+        "Entries with timestamps: 5",
+        "Commands: 2",
+        "Sections: 2",
+        "Progress updates: 0",
+        "Regular output: 2",
+        "Quarantined lines (invalid timestamp): 1",
+    ):
+        assert want in err, (want, err)
+    back = read_entries(spark, out)
+    assert back.count() == 6
+    assert back.where("content = 'bad timestamp'").count() == 0
+    if not partitioned:
+        assert len([f for f in os.listdir(out) if f.endswith(".parquet")]) == 1

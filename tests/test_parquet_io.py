@@ -5,6 +5,7 @@ file-exists + size>0): full read-back value equality.
 """
 
 import os
+import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -12,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from buildkite_logs_parquet_spark.operators.ingest import entries_view, parse_log_lines
+from buildkite_logs_parquet_spark.sources.logs import read_log_lines
 from buildkite_logs_parquet_spark.sources.parquet_io import (
     file_info,
     read_entries,
@@ -37,6 +39,69 @@ def entries(spark):
         "file string, line_no long, raw string",
     )
     return entries_view(parse_log_lines(lines, file_col="file"))
+
+
+@pytest.fixture()
+def two_log_entries(spark, tmp_path):
+    """Entries parsed from two job logs on disk (300 + 200 lines), through
+    the same reader/parser path as an ingest."""
+    paths = []
+    for name, n in (("a.log", 300), ("b.log", 200)):
+        p = tmp_path / name
+        with open(p, "w") as f:
+            for i in range(n):
+                body = f"~~~ {name} section {i}" if i % 50 == 0 else f"line {i}"
+                f.write(f"{OSC}{1000 + i}{BEL}{body}\n")
+        paths.append(str(p))
+    stats: dict = {}
+    lines = read_log_lines(spark, paths, stats_out=stats)
+    return entries_view(
+        parse_log_lines(lines, file_col="file", max_file_lines=max(stats.values()))
+    )
+
+
+def _jobs_submitted(spark, action) -> int:
+    sc = spark.sparkContext
+    group = f"write-jobs-{uuid.uuid4().hex}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_write_submits_no_jobs_beyond_a_plain_write(spark, two_log_entries, tmp_path):
+    """The default write is one action over the incoming plan: no count
+    job and no range-partition sampling on top of what the plain
+    ``DataFrame.write.parquet`` of the same entries runs."""
+    plain = _jobs_submitted(
+        spark, lambda: two_log_entries.write.parquet(str(tmp_path / "plain"))
+    )
+    ours = _jobs_submitted(
+        spark, lambda: write_entries(two_log_entries, str(tmp_path / "ours"))
+    )
+    assert plain >= 1
+    assert ours <= plain, (ours, plain)
+
+
+def test_default_write_layout(spark, two_log_entries, tmp_path):
+    """Non-single-file write: same rows back (``row_id`` included), every
+    part-file sorted by ``row_id`` and capped at
+    ``target_rows_per_partition`` rows."""
+    path = str(tmp_path / "layout.parquet")
+    cap = 64
+    write_entries(two_log_entries, path, target_rows_per_partition=cap)
+    want = sorted(map(tuple, two_log_entries.collect()))
+    back = read_entries(spark, path).select(*two_log_entries.columns)
+    assert sorted(map(tuple, back.collect())) == want
+    parts = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+    assert len(parts) >= len(want) // cap
+    for f in parts:
+        row_ids = pq.read_table(os.path.join(path, f))["row_id"].to_pylist()
+        assert 0 < len(row_ids) <= cap, f
+        assert row_ids == sorted(row_ids), f
 
 
 def test_round_trip_values(spark, entries, tmp_path):

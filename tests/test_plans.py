@@ -48,7 +48,8 @@ def test_seek_predicate_pushed_to_scan(spark, entries_path):
 
 def test_seek_prunes_row_groups_on_range_layout(spark, tmp_path):
     """Runtime proof of SCALE.md's positional-pruning claim: on the
-    range-partitioned layout (repartitionByRange(row_id) + in-file sort),
+    default layout (row_id-sorted part-files capped at
+    target_rows_per_partition rows, each a contiguous row range),
     a high-start seek materializes only the tail of the data — parquet
     row groups whose row_id max falls below the predicate are skipped by
     the pushed min/max filter, so the scan's numOutputRows stays a small
@@ -69,8 +70,8 @@ def test_seek_prunes_row_groups_on_range_layout(spark, tmp_path):
     assert len(df.collect()) == 100
     m = scan_metrics(df)
     assert m["numFiles"] >= 8  # the layout actually is multi-file
-    # pruning: the reader materialized at most one range-partition's worth
-    # of rows, not the whole table
+    # pruning: the reader materialized at most one part-file's worth of
+    # rows, not the whole table
     assert m["numOutputRows"] <= 6_000, m
 
 

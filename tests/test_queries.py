@@ -46,6 +46,28 @@ def test_list_groups(spark, entries):
     assert env["entry_count"] == 3 and env["commands"] == 1 and env["progress"] == 0
 
 
+def test_list_groups_untimestamped_first_seen_is_null(spark):
+    """An entry without a timestamp folds the year-1 sentinel into its
+    group's min; ``as_timestamp=True`` must collect it as NULL instead of
+    raising, while the ``_ms`` columns keep the sentinel for parity."""
+    from buildkite_logs_parquet_spark.operators.ingest import (
+        NO_TIMESTAMP_SENTINEL_MS,
+    )
+
+    lines = spark.createDataFrame(
+        [("f", 0, "~~~ Untimed header"), ("f", 1, f"{OSC}5000{BEL}output")],
+        "file string, line_no long, raw string",
+    )
+    e = entries_view(parse_log_lines(lines, file_col="file"))
+    (g,) = Q.list_groups(e).collect()
+    assert g["name"] == "~~~ Untimed header" and g["entry_count"] == 2
+    assert g["first_seen"] is None
+    assert g["last_seen"].timestamp() == 5.0
+    (ms,) = Q.list_groups(e, as_timestamp=False).collect()
+    assert ms["first_seen_ms"] == NO_TIMESTAMP_SENTINEL_MS
+    assert ms["last_seen_ms"] == 5000
+
+
 def test_filter_by_group(spark, entries):
     # case-insensitive substring
     assert Q.filter_by_group(entries, "running TESTS").count() == 3

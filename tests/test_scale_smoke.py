@@ -45,7 +45,7 @@ def big_log(tmp_path_factory):
 
 @pytest.mark.parametrize("strategy", ["window", "broadcast"])
 def test_full_pipeline_200k_lines(spark, big_log, strategy):
-    lines = read_log_lines(spark, big_log, min_partitions=8)
+    lines = read_log_lines(spark, big_log)
     assert lines.rdd.getNumPartitions() >= 2, "file must split across tasks"
     entries = entries_view(
         parse_log_lines(lines, file_col="file", group_strategy=strategy)
