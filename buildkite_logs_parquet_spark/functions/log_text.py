@@ -48,7 +48,15 @@ _OSC_PREFIX_TEXT = "\x1b_bk;t="
 _BEL = "\x07"
 
 
-def is_osc_line(raw: Column) -> Column:
+def bel_position(raw: Column) -> Column:
+    """1-based position of the first BEL, 0 when the line has none.
+
+    Callers parsing several OSC fields from one line compute this once
+    and pass it as ``bel`` to the functions below."""
+    return F.instr(raw, _BEL)
+
+
+def is_osc_line(raw: Column, bel: Column | None = None) -> Column:
     """True when the line carries a parseable OSC prefix (scanner.go:22-51).
 
     String ops instead of a regex — the Spark analog of the reference's
@@ -58,34 +66,41 @@ def is_osc_line(raw: Column) -> Column:
     below are character-based and mutually consistent.  The prefix contains
     no BEL, so the first BEL anywhere is the delimiter.
     """
+    if bel is None:
+        bel = bel_position(raw)
     return (
         (F.octet_length(raw) >= 10)
         & raw.startswith(_OSC_PREFIX_TEXT)
-        & (F.instr(raw, _BEL) > 0)
+        & (bel > 0)
     )
 
 
-def osc_timestamp_str(raw: Column) -> Column:
+def osc_timestamp_str(raw: Column, bel: Column | None = None) -> Column:
     """Raw timestamp span between ``t=`` and the first BEL.
 
     Only meaningful under ``is_osc_line``; callers gate on it.  The prefix
     ``ESC_bk;t=`` is 7 characters, so the span is 1-based position 8 up to
     the first BEL (Go's 0-based ``timestampStart := 7``, scanner.go:42)."""
-    bel = F.instr(raw, _BEL)
+    if bel is None:
+        bel = bel_position(raw)
     return raw.substr(F.lit(8), bel - 8)
 
 
-def osc_content(raw: Column, osc: Column | None = None) -> Column:
+def osc_content(
+    raw: Column, osc: Column | None = None, bel: Column | None = None
+) -> Column:
     """Content after the first BEL for OSC lines, the whole line otherwise.
 
     Trailing ``\\r`` and any embedded ANSI/OSC sequences are retained —
-    parity requires *not* over-cleaning (scanner.go:63).
+    parity requires *not* over-cleaning (scanner.go:63).  The substring
+    runs to the end of the line with no length argument: a length would
+    need ``length(raw)``, a second character walk over the whole line.
     """
+    if bel is None:
+        bel = bel_position(raw)
     if osc is None:
-        osc = is_osc_line(raw)
-    bel = F.instr(raw, _BEL)
-    after_bel = raw.substr(bel + 1, F.length(raw) - bel)
-    return F.when(osc, after_bel).otherwise(raw)
+        osc = is_osc_line(raw, bel)
+    return F.when(osc, F.substr(raw, bel + 1)).otherwise(raw)
 
 
 def strip_ansi(content: Column) -> Column:

@@ -15,11 +15,12 @@ view; callers can count/inspect them.
 Scale design: group propagation is a running ``last(..., ignorenulls)``.
 State never crosses file boundaries (the reference runs one parser per
 file), so the window partitions by source file — files parallelize across
-executors.  For a *single* giant file, the window degenerates to one task;
-``propagate_groups(strategy="broadcast")`` instead extracts the (tiny)
-header set, turns it into [start, next_start) ranges, and bucket-joins lines
-to ranges — a broadcast hash join with no global sort and no single-task
-stage.  Both strategies are equivalence-tested.
+executors, placed on tasks by line count when the reader recorded the
+counts (``FILE_LINES_METADATA``).  For a *single* giant file, the window
+degenerates to one task; ``propagate_groups(strategy="broadcast")``
+instead builds a (tiny) per-bucket header table, broadcast-joins it to
+lines on (file, bucket) and picks each line's group in-row — no global
+sort and no single-task stage.  Both strategies are equivalence-tested.
 """
 
 from __future__ import annotations
@@ -28,6 +29,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from buildkite_logs_parquet_spark.functions.log_text import (
+    bel_position,
     is_command,
     is_group_header,
     is_osc_line,
@@ -71,6 +73,16 @@ CANONICAL_COLUMNS = [
 #: threshold errs high.
 AUTO_WINDOW_MAX_LINES = 4_000_000
 
+#: Metadata key on a lines frame's file column: ``{file: line count}``,
+#: recorded by ``read_log_lines``.  The window strategy uses it to place
+#: files on its tasks.
+FILE_LINES_METADATA = "line_counts"
+#: Most files ``read_log_lines`` records and the window places itself.
+#: Each line looks its file up in a literal map, a linear scan that costs
+#: about 10 ns per file per line (one 4-vCPU host); above this, hashing
+#: the path spreads files well enough.
+PLACED_FILES_MAX = 32
+
 
 def parse_log_lines(
     lines: DataFrame,
@@ -101,44 +113,60 @@ def parse_log_lines(
     single-giant-file foot-gun).  Pass ``group_strategy="window"`` to
     force the fast path for known-small inputs without counting.
     """
-    raw = F.col(raw_col)
-    osc = is_osc_line(raw)
-    ts_str = osc_timestamp_str(raw)
-    ts_numeric = ts_str.rlike(TS_DIGITS_PATTERN)
-    ts_val = ts_str.try_cast("long")  # null on int64 overflow / malformed
-
-    parsed = (
-        lines.withColumn("_osc", osc)
-        .withColumn(
-            "parse_error",
-            F.when(
-                F.col("_osc") & (~ts_numeric | ts_val.isNull()),
-                F.concat(F.lit("invalid timestamp: "), ts_str),
-            ),
-        )
-        .withColumn(
-            "timestamp",
-            F.when(F.col("_osc") & F.col("parse_error").isNull(), ts_val).otherwise(
-                F.lit(NO_TIMESTAMP_SENTINEL_MS).cast("long")
-            ),
-        )
-        .withColumn("content", osc_content(raw, F.col("_osc")))
-        .withColumn("clean_content", strip_ansi(F.col("content")))
-        .withColumn(
-            "has_timestamp", F.col("timestamp") != NO_TIMESTAMP_SENTINEL_MS
-        )
-        .withColumn("is_command", is_command(F.col("clean_content")))
-        .withColumn("is_group", is_group_header(F.col("clean_content")))
-        .withColumn("is_progress", is_progress(F.col("content"), F.col("clean_content")))
-        .drop("_osc")
-    )
     return propagate_groups(
-        parsed,
+        parse_columns(lines, raw_col),
         order_col=order_col,
         file_col=file_col,
         strategy=group_strategy,
         max_file_lines=max_file_lines,
         auto_window_max_lines=auto_window_max_lines,
+    )
+
+
+def parse_columns(lines: DataFrame, raw_col: str = "raw") -> DataFrame:
+    """The per-line scalar parse, with no window: ``lines`` plus
+    ``parse_error``, ``timestamp``, ``content``, ``clean_content``,
+    ``has_timestamp`` and the three classification flags.
+
+    Shared by the batch ``parse_log_lines`` and the streaming
+    ``parse_lines_stream``.  The first BEL's position and the timestamp
+    span are columns of their own, so each line scans for its BEL once:
+    Catalyst does not inline a non-trivial expression into a projection
+    that references it more than once.  Each ``withColumns`` adds every
+    column whose inputs are ready, in output order: each DataFrame call
+    is analysed again on every pass, at tens of ms each.
+    """
+    raw = F.col(raw_col)
+    bel = F.col("_bel")
+    osc = F.col("_osc")
+    ts_str = F.col("_ts")
+    ts_val = ts_str.try_cast("long")  # null on int64 overflow / malformed
+    content = F.col("content")
+    clean = F.col("clean_content")
+    parse_error = F.when(
+        osc & (~ts_str.rlike(TS_DIGITS_PATTERN) | ts_val.isNull()),
+        F.concat(F.lit("invalid timestamp: "), ts_str),
+    )
+    timestamp = F.when(osc & F.col("parse_error").isNull(), ts_val).otherwise(
+        F.lit(NO_TIMESTAMP_SENTINEL_MS).cast("long")
+    )
+    return (
+        lines.withColumn("_bel", bel_position(raw))
+        .withColumns(
+            {"_osc": is_osc_line(raw, bel), "_ts": osc_timestamp_str(raw, bel)}
+        )
+        .withColumn("parse_error", parse_error)
+        .withColumns({"timestamp": timestamp, "content": osc_content(raw, osc, bel)})
+        .withColumn("clean_content", strip_ansi(content))
+        .withColumns(
+            {
+                "has_timestamp": F.col("timestamp") != NO_TIMESTAMP_SENTINEL_MS,
+                "is_command": is_command(clean),
+                "is_group": is_group_header(clean),
+                "is_progress": is_progress(content, clean),
+            }
+        )
+        .drop("_bel", "_osc", "_ts")
     )
 
 
@@ -175,19 +203,61 @@ def propagate_groups(
         )
         strategy = "window" if small else "broadcast"
     if strategy == "window":
+        keys = [file_col] if file_col else []
+        placed = _place_files(parsed, header, file_col) if file_col else None
+        if placed is not None:
+            parsed, header, keys = placed, F.col("_hdr"), ["_task", file_col]
         w = (
-            Window.partitionBy(*( [file_col] if file_col else [] ))
+            Window.partitionBy(*keys)
             .orderBy(order_col)
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
-        return parsed.withColumn(
+        out = parsed.withColumn(
             "group", F.coalesce(F.last(header, ignorenulls=True).over(w), F.lit(""))
         )
+        return out if placed is None else out.drop("_hdr", "_task")
     if strategy == "broadcast":
         return _propagate_groups_broadcast(
             parsed, header, order_col, file_col, bucket_size
         )
     raise ValueError(f"unknown group propagation strategy: {strategy}")
+
+
+def _place_files(
+    parsed: DataFrame, header: Column, file_col: str
+) -> DataFrame | None:
+    """``parsed`` shuffled so that the window's tasks get even shares of
+    lines, with the row's ``header`` as ``_hdr`` and its task as
+    ``_task``; ``None`` when the file column carries no
+    ``FILE_LINES_METADATA``, lists more than ``PLACED_FILES_MAX`` files,
+    or Spark has no ``repartitionById`` (before 4.1).
+
+    Hashing the path would place files by the text of their path, so two
+    logs share a task, and the other tasks idle, on some runs and not on
+    others.  Here the largest file goes first to the least-loaded task
+    (ties by path), over ``min(files, spark.sql.shuffle.partitions)``
+    tasks.  A file missing from the map gets a NULL task, which still
+    keeps each file's rows in one window partition.  The header is taken
+    before the shuffle, so ``clean_content`` need not cross it when the
+    caller drops it.
+    """
+    meta = next((f.metadata for f in parsed.schema if f.name == file_col), {})
+    counts = meta.get(FILE_LINES_METADATA)
+    if not counts or len(counts) > PLACED_FILES_MAX or not hasattr(
+        parsed, "repartitionById"
+    ):
+        return None
+    spark = parsed.sparkSession
+    n = min(len(counts), int(spark.conf.get("spark.sql.shuffle.partitions")))
+    load = [0] * n
+    task: dict[str, int] = {}
+    for file, lines in sorted(counts.items(), key=lambda kv: (-kv[1], kv[0])):
+        task[file] = load.index(min(load))
+        load[task[file]] += lines
+    to_task = F.create_map(*[F.lit(x) for kv in task.items() for x in kv])
+    return parsed.withColumns(
+        {"_hdr": header, "_task": to_task[F.col(file_col)]}
+    ).repartitionById(n, "_task")
 
 
 def _propagate_groups_broadcast(

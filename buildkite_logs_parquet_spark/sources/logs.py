@@ -15,17 +15,111 @@ from __future__ import annotations
 import os
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-_LINES_SCHEMA = T.StructType(
-    [
-        T.StructField("file", T.StringType(), False),
-        T.StructField("line_no", T.LongType(), False),
-        T.StructField("raw", T.StringType(), False),
-    ]
+from buildkite_logs_parquet_spark.operators.ingest import (
+    FILE_LINES_METADATA,
+    PLACED_FILES_MAX,
 )
+
+
+def drop_trailing_cr(value: Column) -> Column:
+    """The line without one trailing ``\\r`` byte (``bufio.ScanLines``
+    parity).
+
+    The cut is made on the bytes, as the reference makes it.  A character
+    substring would need ``length(value)``, a walk over the whole line that
+    costs more than the rest of the read, and on a malformed UTF-8 tail it
+    would also drop the bytes of the broken sequence before the ``\\r``.
+    """
+    return F.when(
+        value.endswith("\r"),
+        F.substr(value.cast("binary"), F.lit(1), F.octet_length(value) - 1)
+        .cast("string"),
+    ).otherwise(value)
+
+
+def attach_split_positions(
+    scan: DataFrame,
+    file: Column,
+    file_col: str,
+    pos_col: str,
+    per_file: bool,
+) -> tuple[DataFrame, dict[str, int]]:
+    """Number the rows of a file scan by physical position, with no
+    global-order window and no Python row path.
+
+    ``scan`` must be a file-source scan with no shuffle above it.  Adds
+    ``file`` as ``file_col`` and the 0-based position as ``pos_col``:
+    restarting at 0 in each file with ``per_file``, else running on across
+    files in path order.  Also returns each file's row count.
+
+    Spark documents ``monotonically_increasing_id`` as partition-id in the
+    upper bits and a *contiguous* 0-based record number within each
+    partition in the lower 33 bits, and file sources expose each row's
+    split byte offset as ``_metadata.file_block_start``.  Splits of a file
+    are ordered by that byte offset — documented metadata, NOT the
+    scheduler's split-packing order — so one metadata-sized aggregation of
+    ``(file, block_start) → (first id, row count)`` yields exact cumulative
+    offsets.  They are built on the driver as a pyarrow table, so they
+    plan as a ``LocalTableScan`` and no Python worker deserialises the
+    rows, and join back by broadcast.  A runtime
+    guard asserts id-contiguity per split (``max − min + 1 == count``) and
+    fails loudly if a Spark upgrade ever changes the id layout, rather
+    than silently misnumbering rows.
+    """
+    import pyarrow as pa
+
+    tagged = scan.select(
+        "*",
+        file.alias(file_col),
+        F.col("_metadata.file_block_start").alias("_bstart"),
+        F.monotonically_increasing_id().alias("_mid"),
+    )
+    # metadata-sized: one row per (file, split)
+    stats = (
+        tagged.groupBy(file_col, "_bstart")
+        .agg(
+            F.min("_mid").alias("_first"),
+            F.max("_mid").alias("_last"),
+            F.count("*").alias("_cnt"),
+        )
+        .collect()
+    )
+    rows: list[dict] = []
+    counts: dict[str, int] = {}
+    acc = 0
+    for r in sorted(stats, key=lambda r: (r[file_col], r["_bstart"])):
+        if r["_last"] - r["_first"] + 1 != r["_cnt"]:
+            raise RuntimeError(
+                "monotonically_increasing_id is not contiguous within a "
+                f"file split (file={r[file_col]} block_start={r['_bstart']}: "
+                f"ids span {r['_last'] - r['_first'] + 1} for {r['_cnt']} "
+                "rows) — positions would be wrong; the Spark id layout "
+                "this numbering relies on has changed"
+            )
+        if per_file and r[file_col] not in counts:
+            acc = 0
+        rows.append(
+            {file_col: r[file_col], "_bstart": r["_bstart"],
+             "_first": r["_first"], "_base": acc}
+        )
+        acc += r["_cnt"]
+        counts[r[file_col]] = counts.get(r[file_col], 0) + r["_cnt"]
+    offsets = pa.schema(
+        [(file_col, pa.string())]
+        + [(c, pa.int64()) for c in ("_bstart", "_first", "_base")]
+    )
+    bases = scan.sparkSession.createDataFrame(
+        pa.Table.from_pylist(rows, schema=offsets)
+    )
+    positioned = (
+        tagged.join(F.broadcast(bases), on=[file_col, "_bstart"])
+        .withColumn(pos_col, F.col("_base") + (F.col("_mid") - F.col("_first")))
+        .drop("_bstart", "_mid", "_first", "_base")
+    )
+    return positioned, counts
 
 
 def read_log_lines(
@@ -40,74 +134,28 @@ def read_log_lines(
     NOT a separator) and strips exactly one trailing ``\\r``: byte-for-byte
     ``bufio.ScanLines`` parity.
 
-    Line numbering without any Python row path: Spark documents
-    ``monotonically_increasing_id`` as partition-id in the upper bits and a
-    *contiguous* 0-based record number within each partition in the lower
-    33 bits, and file sources expose each row's split byte offset as
-    ``_metadata.file_block_start``.  Splits of a file are ordered by that
-    byte offset — documented metadata, NOT the scheduler's split-packing
-    order — so one metadata-sized aggregation of ``(file, block_start) →
-    (first id, row count)`` yields exact per-file cumulative offsets,
-    broadcast back as a tiny join.  Two streaming scans total (offsets +
-    main), both columnar/whole-stage-codegen; the Python process never
-    sees a row.  A runtime guard asserts id-contiguity per split
-    (``max − min + 1 == count``) and fails loudly if a Spark upgrade ever
-    changes the id layout, rather than silently misnumbering lines.
+    Line numbers come from ``attach_split_positions``: one metadata-sized
+    aggregation job over the scan, whose per-split offsets join back as a
+    local relation, so a pass runs two streaming scans (offsets + main),
+    both columnar/whole-stage-codegen.  ``stats_out`` receives each file's
+    line count, free from that aggregation.  For up to
+    ``PLACED_FILES_MAX`` files the same counts ride on the ``file``
+    column's metadata (``FILE_LINES_METADATA``), where the group window
+    reads them to spread files evenly over its tasks.
     """
     text = spark.read.option("lineSep", "\n").text(path)
-
-    tagged = text.select(
-        F.input_file_name().alias("file"),
-        F.col("_metadata.file_block_start").alias("_bstart"),
-        F.monotonically_increasing_id().alias("_mid"),
-        F.col("value"),
+    lines, counts = attach_split_positions(
+        text, F.input_file_name(), "file", "line_no", per_file=True
     )
-    # metadata-sized: one row per (file, split)
-    stats = (
-        tagged.groupBy("file", "_bstart")
-        .agg(
-            F.min("_mid").alias("_first"),
-            F.max("_mid").alias("_last"),
-            F.count("*").alias("_cnt"),
-        )
-        .collect()
-    )
-    per_file: dict[str, list] = {}
-    for r in stats:
-        if r["_last"] - r["_first"] + 1 != r["_cnt"]:
-            raise RuntimeError(
-                "monotonically_increasing_id is not contiguous within a "
-                f"file split (file={r['file']} block_start={r['_bstart']}: "
-                f"ids span {r['_last'] - r['_first'] + 1} for {r['_cnt']} "
-                "rows) — line numbering would be wrong; the Spark id "
-                "layout this source relies on has changed"
-            )
-        per_file.setdefault(r["file"], []).append(r)
-    bases = []
-    for file, rows in per_file.items():
-        acc = 0
-        for r in sorted(rows, key=lambda r: r["_bstart"]):
-            bases.append((file, r["_bstart"], r["_first"], acc))
-            acc += r["_cnt"]
-        if stats_out is not None:
-            # per-file line counts fall out of the offset scan for free —
-            # callers feed them to propagate_groups(strategy="auto") so the
-            # single-task window never meets a too-large file
-            stats_out[file] = acc
-    base_df = spark.createDataFrame(
-        bases, "file string, _bstart long, _first long, _base long"
-    )
-    raw = F.when(
-        F.col("value").endswith("\r"),
-        F.col("value").substr(F.lit(1), F.length("value") - 1),
-    ).otherwise(F.col("value"))
-    return (
-        tagged.join(F.broadcast(base_df), on=["file", "_bstart"])
-        .select(
-            "file",
-            (F.col("_base") + (F.col("_mid") - F.col("_first"))).alias("line_no"),
-            raw.alias("raw"),
-        )
+    if stats_out is not None:
+        # callers feed these to propagate_groups(strategy="auto") so the
+        # single-task window never meets a too-large file
+        stats_out.update(counts)
+    placed = {FILE_LINES_METADATA: counts} if len(counts) <= PLACED_FILES_MAX else {}
+    return lines.select(
+        F.col("file").alias("file", metadata=placed),
+        "line_no",
+        drop_trailing_cr(F.col("value")).alias("raw"),
     )
 
 

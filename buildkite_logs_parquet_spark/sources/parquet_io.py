@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from buildkite_logs_parquet_spark.operators.ingest import CANONICAL_COLUMNS
+from buildkite_logs_parquet_spark.sources.logs import attach_split_positions
 
 _REQUIRED = ("timestamp", "content")
 _STRING_DEFAULTS = {"content": "", "group": ""}
@@ -67,50 +68,14 @@ def _attach_positional_row_id(df: DataFrame) -> DataFrame:
     """Synthesize ``row_id`` = physical file position for files that lack
     the column (reference-written parquet) WITHOUT a global-order window.
 
-    Same technique as ``logs.read_log_lines``: ``monotonically_increasing_id``
-    is contiguous within a scan partition, and ``_metadata.file_block_start``
-    orders a file's splits by byte offset — so a metadata-sized aggregation
-    of per-split (first id, count) yields exact cumulative offsets, joined
-    back as a broadcast.  Part-files order lexicographically by path (the
-    reference's files are single-file, where this is vacuous).  The same
-    id-contiguity guard fails loudly rather than misnumber.
+    ``logs.attach_split_positions`` numbers the scan with one running
+    count across part-files, which order lexicographically by path (the
+    reference's files are single-file, where this is vacuous).
     """
-    spark = df.sparkSession
-    tagged = (
-        df.withColumn("_file", F.col("_metadata.file_path"))
-        .withColumn("_bstart", F.col("_metadata.file_block_start"))
-        .withColumn("_mid", F.monotonically_increasing_id())
+    positioned, _ = attach_split_positions(
+        df, F.col("_metadata.file_path"), "_file", "row_id", per_file=False
     )
-    stats = (
-        tagged.groupBy("_file", "_bstart")
-        .agg(
-            F.min("_mid").alias("_first"),
-            F.max("_mid").alias("_last"),
-            F.count("*").alias("_cnt"),
-        )
-        .collect()
-    )
-    bases = []
-    acc = 0
-    for r in sorted(stats, key=lambda r: (r["_file"], r["_bstart"])):
-        if r["_last"] - r["_first"] + 1 != r["_cnt"]:
-            raise RuntimeError(
-                "monotonically_increasing_id is not contiguous within a "
-                f"parquet split (file={r['_file']} block_start="
-                f"{r['_bstart']}) — positional row_id would be wrong"
-            )
-        bases.append((r["_file"], r["_bstart"], r["_first"], acc))
-        acc += r["_cnt"]
-    base_df = spark.createDataFrame(
-        bases, "_file string, _bstart long, _first long, _base long"
-    )
-    return (
-        tagged.join(F.broadcast(base_df), on=["_file", "_bstart"])
-        .withColumn(
-            "row_id", F.col("_base") + (F.col("_mid") - F.col("_first"))
-        )
-        .drop("_file", "_bstart", "_mid", "_first", "_base")
-    )
+    return positioned.drop("_file")
 
 
 def read_entries(

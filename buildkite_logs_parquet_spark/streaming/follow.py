@@ -16,19 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from buildkite_logs_parquet_spark.functions.log_text import (
-    is_command,
-    is_group_header,
-    is_osc_line,
-    is_progress,
-    osc_content,
-    osc_timestamp_str,
-    strip_ansi,
-    TS_DIGITS_PATTERN,
-)
-from buildkite_logs_parquet_spark.operators.ingest import (
-    NO_TIMESTAMP_SENTINEL_MS,
-)
+from buildkite_logs_parquet_spark.operators.ingest import parse_columns
+from buildkite_logs_parquet_spark.sources.logs import drop_trailing_cr
 
 
 def follow_log_dir(
@@ -42,12 +31,15 @@ def follow_log_dir(
     windowed aggregation downstream.  ``max_files_per_trigger`` bounds
     batch size by *file count* — the file source never splits one file
     across micro-batches, a guarantee the sink's row numbering relies on.
+    Lines split as in ``read_log_lines``: on ``\\n`` only, then one
+    trailing ``\\r`` dropped, so a progress line's bare ``\\r`` segments
+    stay one entry.
     """
     reader = spark.readStream
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    lines = reader.text(path).select(
-        F.col("value").alias("raw"),
+    lines = reader.option("lineSep", "\n").text(path).select(
+        drop_trailing_cr(F.col("value")).alias("raw"),
         F.input_file_name().alias("file"),
     )
     return parse_lines_stream(lines)
@@ -58,44 +50,14 @@ def parse_lines_stream(lines: DataFrame) -> DataFrame:
     window-free core of ``follow_log_dir``, exposed so ANY lines stream
     composes (the built-in file stream, the ``tail_text`` live-tail
     source, a Kafka value stream after a select)."""
-    raw = F.col("raw")
-    osc = is_osc_line(raw)
-    ts_str = osc_timestamp_str(raw)
-    ts_ok = ts_str.rlike(TS_DIGITS_PATTERN)
-    ts_val = ts_str.try_cast("long")
-    parsed = (
-        lines.withColumn("_osc", osc)
-        .withColumn(
-            "parse_error",
-            F.when(
-                F.col("_osc") & (~ts_ok | ts_val.isNull()),
-                F.concat(F.lit("invalid timestamp: "), ts_str),
-            ),
-        )
-        .withColumn(
-            "timestamp",
-            F.when(F.col("_osc") & F.col("parse_error").isNull(), ts_val).otherwise(
-                F.lit(NO_TIMESTAMP_SENTINEL_MS).cast("long")
-            ),
-        )
-        .withColumn("content", osc_content(raw, F.col("_osc")))
-        .withColumn("clean_content", strip_ansi(F.col("content")))
-        .withColumn(
-            "has_timestamp", F.col("timestamp") != NO_TIMESTAMP_SENTINEL_MS
-        )
-        .withColumn("is_command", is_command(F.col("clean_content")))
-        .withColumn("is_group", is_group_header(F.col("clean_content")))
-        .withColumn(
-            "is_progress", is_progress(F.col("content"), F.col("clean_content"))
-        )
+    return (
+        parse_columns(lines)
         .withColumn(
             "group",
             F.when(F.col("is_group"), F.col("clean_content")).otherwise(F.lit("")),
         )
         .withColumn("event_ts", F.timestamp_millis(F.col("timestamp")))
-        .drop("_osc")
     )
-    return parsed
 
 
 def follow_with_groups(

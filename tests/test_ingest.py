@@ -211,6 +211,56 @@ def test_reader_stats_feed_auto(spark, tmp_path):
     assert by_name == {"a.log": 37, "b.log": 11}
 
 
+def test_window_places_read_files_by_line_count(spark, tmp_path):
+    """Files from ``read_log_lines`` reach the group window's tasks by line
+    count, largest first onto the least-loaded task, whatever their paths
+    hash to: with 4 tasks, the 20- and 10-line logs share one and the 30-
+    and 5-line logs another.  Groups match the broadcast strategy."""
+    from buildkite_logs_parquet_spark.sources.logs import read_log_lines
+
+    sizes = {"a": 50, "b": 40, "c": 30, "d": 20, "e": 10, "f": 5}
+    for name, n in sizes.items():
+        (tmp_path / f"{name}.log").write_text(
+            "".join(f"~~~ {name}{i}\n" if i % 7 == 0 else f"line {i}\n"
+                    for i in range(n))
+        )
+    lines = read_log_lines(spark, str(tmp_path))
+    window = parse_log_lines(lines, file_col="file", group_strategy="window")
+    assert "_task" not in window.columns
+    plan = window._jdf.queryExecution().executedPlan().toString()
+    shuffles = [l for l in plan.splitlines() if "- Exchange " in l]
+    assert len(shuffles) == 1, plan
+    tasks: dict = {}
+    for r in window.select("file", F.spark_partition_id().alias("p")).distinct().collect():
+        tasks.setdefault(r["p"], set()).add(r["file"].rsplit("/", 1)[-1][0])
+    assert sorted(map(sorted, tasks.values())) == [
+        ["a"], ["b"], ["c", "f"], ["d", "e"]
+    ]
+    broadcast = parse_log_lines(lines, file_col="file", group_strategy="broadcast")
+    cols = ["file", "line_no", "group"]
+    assert window.select(cols).exceptAll(broadcast.select(cols)).count() == 0
+    assert window.count() == broadcast.count() == sum(sizes.values())
+
+
+def test_reader_drops_exactly_one_trailing_cr_byte(spark, tmp_path):
+    """``bufio.ScanLines`` drops one ``\\r`` byte and keeps every byte
+    before it, even a broken UTF-8 sequence."""
+    from buildkite_logs_parquet_spark.sources.logs import read_log_lines
+
+    p = tmp_path / "crlf.log"
+    p.write_bytes(
+        b"a\r\r\n" b"b\r\n" b"c\n" b"\xe2\x82\xac\r\n" b"d\xe2x\r\n" b"\r\n"
+    )
+    got = [
+        r["h"]
+        for r in read_log_lines(spark, str(p))
+        .orderBy("line_no")
+        .select(F.hex(F.col("raw").cast("binary")).alias("h"))
+        .collect()
+    ]
+    assert got == ["610D", "62", "63", "E282AC", "64E278", ""]
+
+
 def test_no_headers_at_all(spark):
     lines = ["plain one", "plain two"]
     for strategy in ("window", "broadcast"):

@@ -13,6 +13,7 @@ from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from buildkite_logs_parquet_spark.functions import log_text as LT
+from buildkite_logs_parquet_spark.operators.ingest import parse_log_lines
 from tests import ref_semantics as SPEC
 
 OSC = "\x1b_bk;t="
@@ -207,6 +208,62 @@ def test_parse_matches_machine(spark, lines):
             assert not r["err"]
             assert r["ts"] == want_ts
             assert r["content"] == want_content
+
+
+_no_bracket = "".join(c for c in _alphabet if c != "[")
+_body = st.one_of(
+    st.text(alphabet=_no_bracket, max_size=30),  # no ANSI sequence possible
+    st.builds(
+        lambda a, b: f"{a}[{b}",
+        st.text(alphabet=_alphabet, max_size=15),
+        st.text(alphabet=_alphabet, max_size=15),
+    ),
+    st.sampled_from(
+        ["~~~ Build", "--- :pipeline: up", "$ make", f"{ESC}[90m$ {ESC}[0mls",
+         "Receiving objects: 10%[K", "[2K+++ deps"]
+    ),
+)
+
+
+@settings(max_examples=100, deadline=None)
+@given(
+    st.lists(
+        st.one_of(
+            _body,
+            st.builds(
+                lambda ts, body: f"{OSC}{ts}{BEL}{body}",
+                st.one_of(
+                    st.integers(min_value=-(2**64), max_value=2**64).map(str),
+                    st.text(alphabet="0123456789abc+-_ ", max_size=12),
+                ),
+                _body,
+            ),
+        ),
+        min_size=1,
+        max_size=30,
+    )
+)
+def test_parse_log_lines_matches_pipeline(spark, lines):
+    """The production parse, not the helpers one by one, against the
+    sequential reference pipeline (group propagation included)."""
+    df = spark.createDataFrame(
+        [("f", i, l) for i, l in enumerate(lines)],
+        "file string, line_no long, raw string",
+    )
+    got = {
+        r["line_no"]: r
+        for r in parse_log_lines(df, file_col="file", group_strategy="window").collect()
+    }
+    for want in SPEC.run_pipeline(lines):
+        r = got[want["line_no"]]
+        if want["parse_error"] is not None:
+            line = lines[want["line_no"]]
+            assert r["parse_error"] == "invalid timestamp: " + line[7 : line.index(BEL)]
+            continue
+        assert r["parse_error"] is None
+        for k in ("timestamp", "content", "group", "has_timestamp",
+                  "is_command", "is_group", "is_progress"):
+            assert r[k] == want[k], (k, lines[want["line_no"]])
 
 
 def test_truncate_string(spark):

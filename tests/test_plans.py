@@ -16,6 +16,7 @@ from buildkite_logs_parquet_spark.plans.checks import (
     pushed_filters,
     read_schema_columns,
 )
+from buildkite_logs_parquet_spark.sources.logs import read_log_lines
 from buildkite_logs_parquet_spark.sources.parquet_io import read_entries, write_entries
 
 OSC = "\x1b_bk;t="
@@ -97,6 +98,31 @@ def test_group_window_partitions_by_file(spark):
     plan = explain_str(parsed)
     # the sort/window keys must include the file column → no global window
     assert "file" in plan and "Window" in plan
+
+
+def test_split_offsets_join_as_local_relation(spark, entries_path, tmp_path):
+    """The per-split offsets table is a driver-side local relation, not a
+    Python-RDD scan that would run a stage of its own on every read."""
+    log = tmp_path / "job.log"
+    log.write_text("".join(f"{OSC}{i}{BEL}line {i}\n" for i in range(50)))
+    no_row_id = str(tmp_path / "no_row_id.parquet")
+    spark.read.parquet(entries_path).drop("row_id").write.parquet(no_row_id)
+    for df in (
+        read_log_lines(spark, str(log)),
+        read_entries(spark, no_row_id, synthesize_row_id=True),
+    ):
+        plan = explain_str(df)
+        assert "LocalTableScan" in plan, plan
+        assert "ExistingRDD" not in plan, plan
+
+
+def test_parse_scans_each_line_for_bel_once(spark):
+    lines = spark.createDataFrame(
+        [("f", 0, f"{OSC}1{BEL}x")], "file string, line_no long, raw string"
+    )
+    parsed = parse_log_lines(lines, file_col="file", group_strategy="window")
+    plan = explain_str(parsed, "simple")
+    assert plan.count("instr(") == 1, plan
 
 
 def test_log_lake_partition_pruning(spark, tmp_path):

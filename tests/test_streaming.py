@@ -4,6 +4,8 @@ import time
 
 from pyspark.sql import functions as F
 
+from buildkite_logs_parquet_spark.operators.ingest import parse_log_lines
+from buildkite_logs_parquet_spark.sources.logs import read_log_lines
 from buildkite_logs_parquet_spark.streaming.follow import (
     follow_log_dir,
     follow_with_groups,
@@ -44,6 +46,38 @@ def test_follow_log_dir_parses_new_files(spark, tmp_path):
     assert out["$ make test"]["is_command"]
     # non-OSC line: reference at-rest sentinel (Go zero time, year 1)
     assert out["plain line"]["timestamp"] == -62135596800000
+
+
+def test_follow_log_dir_splits_lines_like_batch(spark, tmp_path):
+    """A bare ``\r`` inside a CRLF line is not a line break: the stream
+    keeps a multi-segment progress line whole, as the batch reader does."""
+    logs = tmp_path / "crlf"
+    logs.mkdir()
+    (logs / "job.log").write_bytes(
+        (
+            f"{OSC}1{BEL}~~~ Fetch\r\n"
+            f"{OSC}2{BEL}Receiving objects:  50%\r{OSC}3{BEL}"
+            "Receiving objects: 100%\r\n"
+            "plain\r\n"
+        ).encode()
+    )
+    batch = parse_log_lines(
+        read_log_lines(spark, str(logs / "job.log")),
+        file_col="file",
+        group_strategy="window",
+    )
+    q = (
+        follow_log_dir(spark, str(logs))
+        .writeStream.format("memory")
+        .queryName("follow_crlf")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    got = sorted(r["content"] for r in spark.sql("select content from follow_crlf").collect())
+    want = sorted(r["content"] for r in batch.collect())
+    assert len(want) == 3
+    assert got == want
 
 
 def test_stream_to_lake_end_to_end(spark, tmp_path):

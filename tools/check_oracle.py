@@ -27,8 +27,10 @@ from __future__ import annotations
 
 import math
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, wherever it is
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 def canon(v):

@@ -23,8 +23,10 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, wherever it is
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 #: (pattern name, compiled regex).  Case-insensitive; heuristic on
 #: purpose — over-flagging is handled by the allowlist, under-flagging
