@@ -308,10 +308,6 @@ def _fan_out(df: DataFrame) -> DataFrame:
     lm_perplexity, dedup_keep_best, containment_join): their pipelines
     shuffle almost immediately anyway, so the extra full-text shuffle
     buys nothing.  Registered users: ann_topk, semantic_dedup."""
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_NO_FANOUT"):  # A/B escape hatch
-        return df
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     if df.rdd.getNumPartitions() < target:

@@ -1,9 +1,15 @@
 #!/usr/bin/env python3
 """Benchmark the engine's headline queries.
 
+Usage: ``python bench.py [key ...]`` (every key when none is named).
+
 Runs at ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
-``{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}``.
+``local[$SPARK_GRAFT_CPUS]``, ``$BENCH_RUNS`` cold runs per key (default 3),
+and prints ONE JSON line:
+``{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}``
+where ``queries`` holds every key's min and ``value`` is their sum.
+``BENCH_DETAIL.json`` adds each run's build/exec split and job, stage and
+task counts (see ``measure``).
 
 Each query is materialized through the noop sink so Catalyst cannot prune
 the measured work down to a count.
@@ -1715,77 +1721,108 @@ def _host_calibration(
     }
 
 
-def _host_drift_suspects(
-    timings: dict,
-    round_ref: dict,
-    calibration: dict,
-    round_ref_cal: dict,
-    workload_changed: list,
-) -> list:
-    """The DETERMINISM §20 heuristic, automated (round-10 verdict #4):
-    a key whose wall moved >25% vs the previous round's closing
-    artifact WHILE the fixed-work calibration probes moved ≥15% the
-    SAME direction is attributed to the HOST, not the plans.  The probe
-    ratio is the MEDIAN of the three probes' cur/ref ratios (robust to
-    one noisy probe); keys named in ``workload_changed`` are excluded —
-    their deltas are intentional reshapes, not drift.  Empty whenever
-    either side's calibration is missing (first round, errored probes):
-    attribution is advisory and must never invent a suspect."""
-    probe_ratios = sorted(
-        calibration[k] / round_ref_cal[k]
-        for k in ("py_loop_s", "jvm_hash_sum_s", "jvm_shuffle_s")
-        if isinstance(calibration.get(k), (int, float))
-        and round_ref_cal.get(k)
-    )
-    if not probe_ratios:
-        return []
-    probe_drift = probe_ratios[len(probe_ratios) // 2]
-    out = []
-    for name, t in timings.items():
-        rref = round_ref.get(name)
-        if (
-            not isinstance(t, (int, float))
-            or rref is None
-            or name in workload_changed
-        ):
+
+
+def _all_queries() -> dict:
+    """Every timed key: the registry plus the bench-only ``x_*`` builders."""
+    import __spark_entry__ as E
+
+    return {**E.queries(), **_extra_ops()}
+
+
+def measure(spark, names, sf_dir: str, runs: int) -> dict:
+    """Time each key ``runs`` times, each run from a cold start.
+
+    Per run: ``build_s`` (until the query function returns, so driver-side
+    jobs inside it count here), ``exec_s`` (the noop write), and the
+    ``jobs``, ``stages`` and ``tasks`` Spark finished during the run.  The
+    counts are app-wide deltas of the status store's job and stage ids, not
+    a job group: the threads of ``__spark_entry__._overlap``'s pool submit
+    jobs without the caller's group.  Skipped stages are not counted.
+
+    Returns ``{key: {"min": s, "runs": [...]}}``; a key that raises gets
+    ``{"error": msg, "runs": [...]}`` and the other keys still run."""
+    import gc
+
+    qs = _all_queries()
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    as_java = sc._jvm.scala.jdk.javaapi.CollectionConverters.asJava
+    no_quantiles = sc._gateway.new_array(sc._jvm.double, 0)
+    last = {"job": -1, "stage": -1}
+
+    def finished() -> dict:
+        # ids grow and the store lists newest first: read only the new ones
+        jsc.listenerBus().waitUntilEmpty()
+        store = jsc.statusStore()
+        out = {"jobs": 0, "stages": 0, "tasks": 0}
+        top = last["job"]
+        for job in as_java(store.jobsList(None)):
+            jid = job.jobId()
+            if jid <= last["job"]:
+                break
+            top = max(top, jid)
+            out["jobs"] += 1
+        last["job"] = top
+        top = last["stage"]
+        stages = store.stageList(None, False, False, no_quantiles, None)
+        for st in as_java(stages):
+            sid = st.stageId()
+            if sid <= last["stage"]:
+                break
+            top = max(top, sid)
+            if str(st.status()) != "SKIPPED":
+                out["stages"] += 1
+                out["tasks"] += st.numCompleteTasks()
+        last["stage"] = top
+        return out
+
+    result = {}
+    for name in names:
+        samples = []
+        try:
+            fn = qs[name]
+            for _ in range(runs):
+                _cold_start(spark, gc)
+                finished()
+                t0 = time.monotonic()
+                df = fn(spark, sf_dir)
+                t1 = time.monotonic()
+                df.write.format("noop").mode("overwrite").save()
+                t2 = time.monotonic()
+                samples.append(
+                    {"build_s": round(t1 - t0, 3), "exec_s": round(t2 - t1, 3),
+                     **finished()}
+                )
+        except Exception as exc:  # noqa: BLE001 — record and go on
+            msg = f"{type(exc).__name__}: {exc}"[:500]
+            print(f"bench: {name} FAILED: {msg[:200]}", file=sys.stderr)
+            result[name] = {"error": msg, "runs": samples}
             continue
-        ratio = float(t) / rref
-        if (ratio > 1.25 and probe_drift > 1.15) or (
-            ratio < 0.8 and probe_drift < 0.87
-        ):
-            out.append(name)
-    return out
+        wall = min(s["build_s"] + s["exec_s"] for s in samples)
+        result[name] = {"min": round(wall, 3), "runs": samples}
+    return result
 
 
 def main() -> None:
-    import __spark_entry__ as E
+    """Time the keys named on the command line (all of them when none is
+    named), print one JSON line, write ``BENCH_DETAIL.json`` (every run's
+    profile) and append the line to ``BENCH_HISTORY.jsonl``."""
+    import gc
+
     from buildkite_logs_parquet_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
-    # sample load BEFORE Spark spins up: load1 at this point is entirely
-    # OTHER processes — the contamination signal.  >25% of the cores
-    # already busy means per-query walls are not comparable across runs.
+    runs = int(os.environ.get("BENCH_RUNS", "3"))
+    names = sys.argv[1:] or BENCH_QUERIES + sorted(_extra_ops())
+    here = os.path.dirname(os.path.abspath(__file__))
+    # sampled before Spark starts, so load1 here is other processes' work
     load_before = _load_snapshot()
-    load_contaminated = bool(
-        load_before
-        and load_before["load1"] > max(4.0, 0.25 * load_before["ncpu"])
-    )
-    if load_contaminated:
-        print(
-            f"bench: WARNING — pre-run load1={load_before['load1']:.1f} on "
-            f"{load_before['ncpu']} cores; walls will be contaminated and "
-            "the artifact is flagged load_contaminated",
-            file=sys.stderr,
-        )
     spark = get_spark(app_name="bklp-bench")
-    # the CacheManager's `Asked to cache already cached data` WARN can
-    # still fire WITHIN one run when a query persists the same relation
+    # the CacheManager warns when one run persists the same relation
     # through two code paths (registry + operator-internal); the mapping
-    # is harmless, so the advisory WARN is lowered to ERROR for this
-    # logger only.  (It no longer fires on the min-of-runs repeat path:
-    # since the round-11 measurement fix every run starts from a cleared
-    # cache — see _cold_start.)
+    # is harmless, so that logger is lowered to ERROR
     try:
         jvm = spark.sparkContext._jvm
         jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
@@ -1794,395 +1831,67 @@ def main() -> None:
         )
     except Exception:  # noqa: BLE001 — logging config must never kill bench
         pass
-
-    # host-speed probes BEFORE the measured queries (fixed work, ~5s):
-    # cross-round drift on unchanged keys is read against these
     try:
         calibration = _host_calibration(spark)
     except Exception as exc:  # noqa: BLE001 — calibration is advisory
         calibration = {"error": f"{type(exc).__name__}: {exc}"[:200]}
 
-    qs = dict(E.queries())
-    extras = _extra_ops()
-    qs.update(extras)
-    bench_names = BENCH_QUERIES + sorted(extras)
-    # min-of-3 by default: this rig shows occasional ~10s external
-    # interference bursts that can capture BOTH runs of one query under
-    # min-of-2 (observed: same-code totals 63-98s); a third sample makes
-    # the min robust to a single burst at ~+50% bench wall time
-    runs = int(os.environ.get("BENCH_RUNS", "3"))
-    # burst guard: the committed trend log knows how fast each query ran
-    # in recent rounds — when a fresh min is >2x the trailing committed
-    # min at the SAME sf, all samples likely landed in one sustained
-    # interference burst (observed once in round 4: 3.4x on one query);
-    # take extra samples before accepting, and flag what stays slow
-    hist_best: dict[str, float] = {}
-    try:
-        hist_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_HISTORY.jsonl"
-        )
-        with open(hist_path) as f:
-            entries = [json.loads(line) for line in f if line.strip()]
-        same_sf = [e for e in entries if str(e.get("sf")) == str(sf)]
-        for entry in same_sf[-5:]:
-            for qn, v in (entry.get("queries") or {}).items():
-                if isinstance(v, (int, float)):
-                    hist_best[qn] = min(
-                        hist_best.get(qn, float("inf")), float(v)
-                    )
-    except Exception:  # no history yet — guard simply stays off
-        hist_best = {}
-    # round-over-round reference (round-9 verdict #4): workload-change
-    # reporting must compare against the PREVIOUS ROUND'S CLOSING
-    # artifact, not the all-history min — same-round pair runs land in
-    # BENCH_HISTORY.jsonl first and re-baseline hist_best, which is how
-    # round 9 reshaped 14 of 50 keys yet stamped `workload_changed: []`.
-    # BENCH_r{N}.json is the driver's per-round closing artifact; its
-    # headline `parsed.queries` is truncated to the top 10, so the full
-    # per-query map is recovered from the history entry with the same
-    # total at the same sf (the stamped run is always appended there).
-    round_ref: dict[str, float] = {}
-    round_ref_cal: dict[str, float] = {}
-    try:
-        import glob as _glob
-        import re as _re
-
-        _here = os.path.dirname(os.path.abspath(__file__))
-        arts = []
-        for p in _glob.glob(os.path.join(_here, "BENCH_r*.json")):
-            m = _re.search(r"BENCH_r0*(\d+)\.json$", p)
-            if m:
-                arts.append((int(m.group(1)), p))
-        if arts:
-            with open(max(arts)[1]) as f:
-                art = json.load(f) or {}
-            parsed = art.get("parsed") or {}
-            # round-11 fix: the driver's tail capture can truncate the
-            # headline line so `parsed` lands null (BENCH_r10.json did)
-            # — then the round-ref baseline silently degraded to the
-            # trailing-min path and under-reported workload_changed
-            # (run A of the r11 pair missed version_drift at +41%).
-            # Recover the headline total from the raw tail fragment
-            # (the first `<float>, "unit": "sec"` is the value — the
-            # headline prints value then unit) and the sf from the
-            # artifact's own top level.
-            if not parsed:
-                m = _re.search(
-                    r"([0-9]+\.[0-9]+),\s*\"unit\":\s*\"sec\"",
-                    art.get("tail") or "",
-                )
-                if m and str(art.get("sf")) == str(sf):
-                    parsed = {"sf": art.get("sf"), "value": float(m.group(1))}
-            if str(parsed.get("sf")) == str(sf):
-                target = float(parsed.get("value"))
-                for entry in reversed(same_sf):
-                    v = entry.get("value")
-                    if (
-                        isinstance(v, (int, float))
-                        and abs(float(v) - target) < 1e-6
-                    ):
-                        round_ref = {
-                            qn: float(t)
-                            for qn, t in (entry.get("queries") or {}).items()
-                            if isinstance(t, (int, float))
-                        }
-                        round_ref_cal = {
-                            k: float(v)
-                            for k, v in (
-                                entry.get("calibration") or {}
-                            ).items()
-                            if isinstance(v, (int, float))
-                        }
-                        break
-    except Exception:  # noqa: BLE001 — reference is advisory
-        round_ref = {}
-    # keys whose registered workload intentionally GREW (new union-tag
-    # legs riding the same row): the trailing-min guard would misread the
-    # one-time jump as a burst until the trend log accumulates 5
-    # post-change entries.  List them here with the cause; prune entries
-    # once the history window has caught up.
-    workload_grew = {
-        "corpus_select": "curriculum 'curr' leg (round 5)",
-        "pii_scrub": "unicode normalization digests + Luhn (5186bef)",
-        "bpe_encode": "wordpiece longest-match legs (04b789b)",
-        "lm_perplexity": "Kneser-Ney train+score legs; dsir weight columns (round 9)",
-        "text_profile": "script detection columns",
-        "doc_chunks": "SFT chat legs + span-corruption/negative legs (round 5)",
-        # round-9 consolidations: the seven freed keys ride these
-        # carriers now, so each carrier's workload grew by the merged
-        # relation (same proven SQL, new location)
-        "bm25_scores": "tfidf 'tfidf' leg (round 9)",
-        "doc_quality": "pii/blocklist/normalization columns (round 9)",
-        "webgraph_rank": "url-domain 'domu:'/'domd:' legs (round 9,"
-        " un-packed round 11); triangle 'tri:'/'trideg:' legs (round 10)",
-        # round-11 consolidations (judge-directed): the last two
-        # oracle-expressible bench-only ops ride their related proven
-        # carriers — the retired x_corpus_overlap_est work now times
-        # inside corpus_overlap, and both version_diff directions time
-        # inside version_drift
-        "corpus_overlap": "MinHash estimator 'est' rows (round 11; the"
-        " former x_corpus_overlap_est entry)",
-        "version_drift": "version_diff fwd/rev CDC rows (round 11)",
-        # round-10 consolidations: the three freed keys ride these
-        # carriers now (same proven SQL, new location)
-        "funnel_steps": "cohort_retention 'cohort' rows +"
-        " funnel_user_times 'usr' rows (round 10)",
-        "events_agg": "round-7 sessions+native legs; asof + interval join"
-        " legs (round 8.2); fill_gaps 'gaps' rows (round 10)",
-        "setsim_join": "simhash sh: legs (round 9 re-balance)",
-        # ngram_jaccard SHRANK round 9 (sh: legs -> setsim_join), so its
-        # trailing-min guard re-arms from the round-7 floor
-        "ngram_jaccard": "round-9 split: sh: legs moved to setsim_join",
-        # round-8 second-wave consolidations: merged legs land on these
-        # carriers (revenue_rankings gains the lineitem-sized running-
-        # revenue window; events_agg the asof+interval joins;
-        # segment_dedup the winnow + exact-stats legs; top_parts_per_brand
-        # the per-type stats)
-        "top_terms_by_group": "ngram_counts bigram leg (round 8 consolidation)",
-        "revenue_rankings": "running-revenue window leg (round 8.2)",
-        "segment_dedup": "winnow + exact-stats legs (round 8.2)",
-        "top_parts_per_brand": "part_type_stats legs (round 8.2)",
-        # round-6 plan change (judge perf-weak fix): exact percentiles now
-        # run ~3 extra bounded histogram jobs per numeric column instead
-        # of one single-task collect_list — slower at tiny sf (fixed job
-        # overhead), the only shape that survives 100x
-        "table_profile": "round-6 percentile bisection; k-anonymity 'kanon' row (round 9)",
-        "orders_discount_audit": "round-6 q17_small_qty row; q1 pricing leg (round 9)",
-        # round-7 consolidations freeing slots for probe_env /
-        # preference_pairs / dedup_keep_best (rule 14b)
-        "embedding_label_centroid_sim": "round-7 lshpair leg; kmeans 'km' legs (round 9)",
+    profile = measure(spark, names, sf_dir, runs)
+    timings = {
+        n: p["min"] if "min" in p else {"error": p["error"]}
+        for n, p in profile.items()
     }
-    burst_suspects: list[str] = []
-    workload_changed: list[str] = []
-    leg_times: dict[str, dict] = {}
-    timings: dict[str, object] = {}
-    errors: dict[str, str] = {}
-    total = 0.0
-    for name in bench_names:
-        best = None
-        # round-11 measurement fix (OPTIMIZATION_r11.md "Methodology"):
-        # the cache is now cleared between EVERY run, including the runs
-        # of one query.  The old loop cleared only between queries, so
-        # with operator-internal persists (round-11's multi-consumer
-        # intermediates, ann_topk's probe cache, ...) runs 2..N reused
-        # run 1's materialized blocks and min-of-runs reported a
-        # WARM-cache wall that skips the expensive upstream compute.
-        # Every reported number must be a from-parquet computation; the
-        # min now only absorbs interference bursts and JIT/codegen
-        # warm-up, not cached state.  (Cache clearing is harness
-        # hygiene, so it sits OUTSIDE the timed region.)
-        import gc
+    errors = [n for n, p in profile.items() if "error" in p]
 
-        # one broken query must never void the whole benchmark: record the
-        # error for that query and keep measuring the rest
-        try:
-            fn = qs[name]
-            for _ in range(runs):  # min over COLD runs (burst/JIT robustness)
-                _cold_start(spark, gc)
-                t0 = time.monotonic()
-                df = fn(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                dt = time.monotonic() - t0
-                best = dt if best is None else min(best, dt)
-        except Exception as exc:  # noqa: BLE001 — record-and-continue harness
-            msg = f"{type(exc).__name__}: {exc}"
-            errors[name] = msg[:500]
-            timings[name] = {"error": msg[:500]}
-            print(f"bench: {name} FAILED: {msg[:200]}", file=sys.stderr)
+    # per-leg walls for the multi-leg keys: a regression in one leg of an
+    # 11-leg row cannot hide in the key's total
+    qs = _all_queries()
+    leg_times: dict[str, dict] = {}
+    for name in profile:
+        if name in errors or not (name in LEG_TAG_COLS or name in PHASE_FNS):
             continue
-        # workload-change report: a declared-intent key (workload_grew)
-        # whose closing time moved >25% EITHER WAY vs the previous
-        # round's closing artifact is listed — the round-ref baseline is
-        # immune to same-round re-baselining (round-9 verdict #4)
-        rref = round_ref.get(name)
-        if (
-            name in workload_grew
-            and rref is not None
-            and (best > 1.25 * rref or best < 0.8 * rref)
-        ):
-            workload_changed.append(name)
-        ref = hist_best.get(name)
-        if name in workload_grew and ref is not None and best > 2.0 * ref:
-            # known intentional growth — don't burn extra samples, don't
-            # cry burst; record separately so the artifact stays honest
-            if name not in workload_changed:
-                workload_changed.append(name)
-            ref = None
-        extra = 0
-        while ref is not None and best > 2.0 * ref and extra < 2:
-            _cold_start(spark, gc)
-            t0 = time.monotonic()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            best = min(best, time.monotonic() - t0)
-            extra += 1
-        if ref is not None and best > 2.0 * ref:
-            burst_suspects.append(name)
-            print(
-                f"bench: {name} min {best:.2f}s is >2x the trailing "
-                f"committed min {ref:.2f}s after {runs + extra} samples — "
-                "flagging (genuine regression or sustained interference)",
-                file=sys.stderr,
-            )
-        timings[name] = round(best, 3)
-        total += best
-        # per-leg walls for the big union-tagged keys (round-7 judge ask):
-        # one filtered drain per leg AFTER the headline measurement.
-        # Filtering a union on its literal tag column constant-folds each
-        # branch's predicate, so Catalyst PRUNES the other legs and the
-        # wall is that leg's genuine cost — a regression in one leg of an
-        # 11-leg row can no longer hide in the aggregate number.
-        if name in LEG_TAG_COLS:
-            try:
+        _cold_start(spark, gc)
+        try:
+            if name in LEG_TAG_COLS:
                 leg_times[name] = _time_legs(
                     spark, qs[name], sf_dir, LEG_TAG_COLS[name]
                 )
-            except Exception as exc:  # noqa: BLE001 — diagnostics only
-                leg_times[name] = {"error": f"{type(exc).__name__}: {exc}"[:200]}
-        elif name in PHASE_FNS:
-            try:
-                phases = PHASE_FNS[name](spark, sf_dir)
+            else:
                 walls = {}
-                for lab, pdf in phases.items():
+                for lab, pdf in PHASE_FNS[name](spark, sf_dir).items():
                     t0 = time.monotonic()
                     pdf.write.format("noop").mode("overwrite").save()
                     walls[lab] = round(time.monotonic() - t0, 3)
                 leg_times[name] = walls
-            except Exception as exc:  # noqa: BLE001 — diagnostics only
-                leg_times[name] = {"error": f"{type(exc).__name__}: {exc}"[:200]}
+        except Exception as exc:  # noqa: BLE001 — diagnostics only
+            leg_times[name] = {"error": f"{type(exc).__name__}: {exc}"[:200]}
 
-    # whole-run drift check (round-8, judge ask #2): burst_suspects is
-    # tuned for single-query bursts and is blind to UNIFORM contention —
-    # exactly how the round-7 closing artifact recorded 165.8s against a
-    # 113.8s mid-round twin of byte-identical code.  Compare the total
-    # against the last committed run of the IDENTICAL workload (same sf,
-    # same query-name set); >20% slower triggers one extra pass over
-    # every query (min kept), and whatever remains is recorded so the
-    # reader sees the drift instead of reconstructing it from git.
-    drift_check: dict | None = None
-    ref_total = None
-    try:
-        for entry in reversed(same_sf):
-            eq = entry.get("queries") or {}
-            if (
-                isinstance(entry.get("value"), (int, float))
-                and set(eq) == set(bench_names)
-            ):
-                ref_total = float(entry["value"])
-                break
-    except Exception:  # noqa: BLE001 — history is advisory
-        ref_total = None
-    if ref_total is not None and not errors and total > 1.2 * ref_total:
-        print(
-            f"bench: whole-run drift — total {total:.1f}s is >20% over the "
-            f"last committed identical-workload run ({ref_total:.1f}s); "
-            "taking one extra pass per query and keeping mins",
-            file=sys.stderr,
-        )
-        first_pass_total = total
-        for name in bench_names:
-            if name in errors:
-                continue
-            spark.catalog.clearCache()
-            try:
-                t0 = time.monotonic()
-                qs[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                dt = time.monotonic() - t0
-                if dt < float(timings[name]):
-                    timings[name] = round(dt, 3)
-            except Exception:  # noqa: BLE001 — keep the first-pass number
-                pass
-        total = sum(
-            v for v in timings.values() if isinstance(v, (int, float))
-        )
-        drift_check = {
-            "ref_total": round(ref_total, 3),
-            "first_pass_total": round(first_pass_total, 3),
-            "final_total": round(total, 3),
-            "still_drifting": total > 1.2 * ref_total,
-        }
-    elif ref_total is not None:
-        drift_check = {
-            "ref_total": round(ref_total, 3),
-            "first_pass_total": round(total, 3),
-            "final_total": round(total, 3),
-            "still_drifting": False,
-        }
-
-    # host-drift attribution (round-10 verdict #4: the §20 heuristic,
-    # automated — see _host_drift_suspects).  Runs on the FINAL timings,
-    # after the whole-run drift check's extra passes have kept their
-    # mins, so a key rescued by a re-measurement is not flagged.
-    try:
-        host_drift_suspected = _host_drift_suspects(
-            timings, round_ref, calibration, round_ref_cal, workload_changed
-        )
-    except Exception:  # noqa: BLE001 — attribution is advisory
-        host_drift_suspected = []
-
-    load_after = _load_snapshot()
     result = {
         "metric": "headline_queries_total_wall",
-        # a partial total is NOT comparable to a full one: on any query
-        # error the headline value goes null so trend comparisons cannot
-        # mistake a broken run for a speedup (per-query timings remain)
-        "value": round(total, 3) if not errors else None,
+        # a partial total is not comparable to a full one: on any error the
+        # value is null so a broken run never reads as a speedup
+        "value": None if errors else round(
+            sum(p["min"] for p in profile.values()), 3
+        ),
         "unit": "sec",
         "queries": timings,
         "n_errors": len(errors),
-        "measured_queries": len(bench_names) - len(errors),
-        "burst_suspects": burst_suspects,
-        "workload_changed": workload_changed,
-        "host_drift_suspected": host_drift_suspected,
+        "measured_queries": len(profile) - len(errors),
         "leg_times": leg_times,
         "load_before": load_before,
-        "load_after": load_after,
-        "load_contaminated": load_contaminated,
+        "load_after": _load_snapshot(),
         "calibration": calibration,
-        "drift_check": drift_check,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
-    # round-6 artifact fix: the full per-query map (75+ entries) made the
-    # headline line exceed the driver's tail-capture window in round 5
-    # (BENCH_r05.json recorded "parsed": null).  The PRINTED line is now a
-    # compact headline — totals, errors, the 10 slowest queries, and any
-    # flags — guaranteed to stay parseable; the complete per-query map is
-    # written to BENCH_DETAIL.json next to this script (and, as before,
-    # appended in full to BENCH_HISTORY.jsonl).
-    ok_timings = {
-        k: v for k, v in timings.items() if isinstance(v, (int, float))
-    }
-    compact = dict(
-        sorted(ok_timings.items(), key=lambda kv: kv[1], reverse=True)[:10]
-    )
-    for name in (
-        list(errors)
-        + burst_suspects
-        + workload_changed
-        + host_drift_suspected
-    ):
-        if name in timings:
-            compact.setdefault(name, timings[name])
-    headline = {
-        **{k: v for k, v in result.items() if k != "queries"},
-        "queries": compact,  # slowest 10 + errored/flagged only
-        "queries_truncated": len(compact) < len(timings),
-        "n_queries": len(timings),
-        "detail_file": "BENCH_DETAIL.json",
-    }
-    print(json.dumps(headline))
+    print(json.dumps(result))
     try:
-        detail_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-        )
-        with open(detail_path, "w") as f:
-            json.dump(result, f, indent=1, sort_keys=True)
-    except Exception as exc:  # headline already printed — never die here
+        detail = {**result, "runs": {n: p["runs"] for n, p in profile.items()}}
+        with open(os.path.join(here, "BENCH_DETAIL.json"), "w") as f:
+            json.dump(detail, f, indent=1, sort_keys=True)
+    except Exception as exc:  # the line is already printed — never die here
         print(f"warning: could not write BENCH_DETAIL.json: {exc}", file=sys.stderr)
 
-    # append to the committed trend log so any round can answer "which
-    # queries regressed" mechanically (diff the last two lines)
+    # the trend log: diff two lines to see which keys moved
     try:
         import datetime
         import subprocess
@@ -2191,7 +1900,7 @@ def main() -> None:
             ["git", "rev-parse", "--short", "HEAD"],
             capture_output=True,
             text=True,
-            cwd=os.path.dirname(os.path.abspath(__file__)),
+            cwd=here,
         ).stdout.strip()
         stamped = {
             "utc": datetime.datetime.now(datetime.timezone.utc).strftime(
@@ -2200,17 +1909,13 @@ def main() -> None:
             "rev": rev or None,
             **result,
         }
-        hist = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_HISTORY.jsonl"
-        )
-        with open(hist, "a") as f:
+        with open(os.path.join(here, "BENCH_HISTORY.jsonl"), "a") as f:
             f.write(json.dumps(stamped) + "\n")
-    except Exception as exc:  # the bench result must never die on logging
+    except Exception as exc:  # the result must never die on logging
         print(f"warning: could not append BENCH_HISTORY.jsonl: {exc}", file=sys.stderr)
 
-    # nonzero exit only when NOTHING could be measured; partial failures are
-    # reported inside the JSON line instead
-    if errors and len(errors) == len(bench_names):
+    # nonzero exit only when nothing could be measured
+    if len(errors) == len(profile):
         sys.exit(1)
 
 

@@ -1,22 +1,74 @@
 """Guards for bench.py's measurement plumbing (not the timings
-themselves): the dedup_keep_best phase plans must stay consistent with
+themselves): ``measure`` must cold-start every run and count every job a
+run launches, the dedup_keep_best phase plans must stay consistent with
 the registered key, and the host-calibration probes must return the
-fields cross-round comparisons read.
-
-These exist because bench.py is the round-over-round evidence trail —
-a silently-broken phase plan or calibration probe would erase the
-attribution instrumentation added for the round-9 verdict #3 drift
-question without failing anything."""
+fields cross-round comparisons read."""
 
 from __future__ import annotations
 
+import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 import bench as B  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
+RUN_FIELDS = {"build_s", "exec_s", "jobs", "stages", "tasks"}
+
+
+def test_measure_cold_starts_every_run(spark):
+    """A run that finds the previous run's persisted blocks skips their
+    jobs, so equal job counts on a persisting key mean each run started
+    cold.  A broken key is recorded and the next key still runs."""
+    got = B.measure(spark, ["no_such_key", "dedup_keep_best"], SF, runs=2)
+    assert got["no_such_key"] == {"error": "KeyError: 'no_such_key'", "runs": []}
+    runs = got["dedup_keep_best"]["runs"]
+    assert len(runs) == 2
+    assert all(set(r) == RUN_FIELDS for r in runs)
+    assert runs[0]["jobs"] == runs[1]["jobs"] > 0
+    assert all(r["stages"] > 0 and r["tasks"] >= r["stages"] for r in runs)
+    walls = [r["build_s"] + r["exec_s"] for r in runs]
+    assert abs(got["dedup_keep_best"]["min"] - min(walls)) < 0.002
+
+
+def test_measure_counts_overlap_pool_jobs(spark):
+    """``_overlap``'s pool threads do not inherit the caller's job group,
+    so a count by job group misses the jobs of ngram_jaccard's legs.
+    ``measure`` must count them all: its count equals the app-wide job-id
+    gap between two probe jobs around the call."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def probe_job_ids(group):
+        sc.setJobGroup(group, group)
+        sc.parallelize([1]).count()
+        return tracker.getJobIdsForGroup(group)
+
+    before = max(probe_job_ids("measure-before"))
+    sc.setJobGroup("measure-run", "measure-run")
+    got = B.measure(spark, ["ngram_jaccard"], SF, runs=1)["ngram_jaccard"]
+    after = min(probe_job_ids("measure-after"))
+    sc.setJobGroup(None, None)
+    (run,) = got["runs"]
+    assert set(run) == RUN_FIELDS
+    assert run["jobs"] == after - before - 1
+    assert len(tracker.getJobIdsForGroup("measure-run")) < run["jobs"]
+
+
+def test_no_hard_coded_checkout_path():
+    """Tools and tests find the checkout from ``__file__``: a hard-coded
+    one makes a second checkout import the first one's modules."""
+    pinned = re.compile(r"sys\.path\.insert\(0, [\"']/")
+    bad = [
+        str(p.relative_to(ROOT))
+        for d in ("tools", "tests")
+        for p in sorted((ROOT / d).rglob("*.py"))
+        if str(ROOT) in p.read_text() or pinned.search(p.read_text())
+    ]
+    assert bad == []
 
 
 def test_dedup_keep_best_phases_align_with_registered_key(spark):
@@ -42,30 +94,6 @@ def test_host_calibration_shape(spark):
     assert set(cal) == {"py_loop_s", "jvm_hash_sum_s", "jvm_shuffle_s"}
     for v in cal.values():
         assert isinstance(v, float) and v >= 0.0
-
-
-def test_host_drift_suspects_heuristic():
-    """The automated §20 attribution (round-10 verdict #4): flag a key
-    only when its wall AND the median probe ratio move >25% / ≥15% the
-    same direction; never flag reshaped keys or when calibration is
-    missing."""
-    cal_slow = {"py_loop_s": 0.6, "jvm_hash_sum_s": 0.5, "jvm_shuffle_s": 0.58}
-    cal_ref = {"py_loop_s": 0.3, "jvm_hash_sum_s": 0.29, "jvm_shuffle_s": 0.3}
-    timings = {"a": 2.6, "b": 1.0, "c": 3.0, "d": 2.6}
-    round_ref = {"a": 2.0, "b": 1.0, "c": 2.0}
-    # host 2x slower: 'a' (+30%) flagged, 'b' (flat) not, 'c' reshaped
-    # not, 'd' has no reference so not
-    got = B._host_drift_suspects(timings, round_ref, cal_slow, cal_ref, ["c"])
-    assert got == ["a"]
-    # probes flat -> same key deltas are PLAN drift, nothing flagged
-    assert B._host_drift_suspects(timings, round_ref, cal_ref, cal_ref, []) == []
-    # faster host + faster key flags the downward direction too
-    cal_fast = {"py_loop_s": 0.2, "jvm_hash_sum_s": 0.2, "jvm_shuffle_s": 0.2}
-    got = B._host_drift_suspects({"a": 1.4}, {"a": 2.0}, cal_fast, cal_ref, [])
-    assert got == ["a"]
-    # missing calibration on either side -> empty, never invent suspects
-    assert B._host_drift_suspects(timings, round_ref, {}, cal_ref, []) == []
-    assert B._host_drift_suspects(timings, round_ref, cal_slow, {}, []) == []
 
 
 def test_funnel_steps_usr_rows_equal_standalone_funnel_user_times(spark):

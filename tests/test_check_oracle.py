@@ -7,8 +7,9 @@ import datetime
 import decimal
 import math
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from tools.check_oracle import canon, rows_to_multiset  # noqa: E402
 

@@ -10,8 +10,10 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 SNAPSHOT = [
     "bk_parse_entries",
@@ -81,7 +83,7 @@ def main() -> None:
         out.append(f"## {name}\n\n```\n{head}\n```\n")
         if scans:
             out.append(f"Scan details:\n\n```\n{scans}\n```\n")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(ROOT / "PLANS.md", "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")
 

@@ -20,8 +20,9 @@ from __future__ import annotations
 
 import hashlib
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 VARIANTS = {
     # our local gate's config

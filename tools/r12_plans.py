@@ -3,15 +3,19 @@
 the named queries into plans/r12/<query>_<tag>.txt.
 
 Usage: python tools/r12_plans.py <before|after> [query ...]
-Defaults to the round-11 target list when no queries are given.
+Defaults to the round-11 and round-12 target list when no queries are
+given.  The lazy (non-overlapped) operator tree is what gets dumped.
 """
 
 from __future__ import annotations
 
 import os
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
+OUT = ROOT / "plans" / "r12"
 
 TARGETS = [
     # registered keys (oracle-gated)
@@ -69,9 +73,8 @@ def main() -> None:
     # (the overlapped shape is dumped separately with suffix _eager)
     if hasattr(E, "_OVERLAP_LEGS"):
         E._OVERLAP_LEGS = False
-    qs = dict(E.queries())
-    qs.update(bench._extra_ops())
-    os.makedirs("/root/repo/plans/r12", exist_ok=True)
+    qs = bench._all_queries()
+    OUT.mkdir(parents=True, exist_ok=True)
     for name in names:
         try:
             spark.catalog.clearCache()
@@ -80,7 +83,7 @@ def main() -> None:
             plan = explain_str(df, "formatted")
         except Exception as exc:  # noqa: BLE001 — record and continue
             plan = f"ERROR building plan: {type(exc).__name__}: {exc}"
-        path = f"/root/repo/plans/r12/{name}_{tag}.txt"
+        path = OUT / f"{name}_{tag}.txt"
         with open(path, "w") as f:
             f.write(plan)
         print(f"wrote {path} ({len(plan.splitlines())} lines)")

@@ -7,15 +7,18 @@ small-scale cost is fixed Spark overhead and the plan's per-row cost is
 healthy; a query whose time tracked or exceeded the input ratio would be
 the one to re-plan.  Writes SCALING.md.
 
+Each point is the min of ``bench.measure``'s cold runs.
+
 Usage: python tools/scaling_probe.py [runs_per_point]
 """
 
 from __future__ import annotations
 
 import sys
-import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 #: queries whose INPUT tables actually scale across the sf range
 #: (lineitem/orders ×100, events ×100; documents/embeddings only ×10 at
@@ -91,38 +94,23 @@ SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"
 
 
 def main() -> None:
-    import __spark_entry__ as E
+    import bench as B
     from buildkite_logs_parquet_spark.session import get_spark
 
     runs = int(sys.argv[1]) if len(sys.argv) > 1 else 2
     spark = get_spark(app_name="scaling-probe")
-    import bench as B
-
-    qs = dict(E.queries())
-    qs.update(B._extra_ops())
     results: dict[str, list[float]] = {}
     for name, _tables, _mult in PROBES:
-        times = []
-        for sf_dir in SFS:
-            best = None
-            spark.catalog.clearCache()
-            for _ in range(runs):
-                t0 = time.monotonic()
-                qs[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                dt = time.monotonic() - t0
-                best = dt if best is None else min(best, dt)
-            times.append(round(best, 3))
-        results[name] = times
-        print(name, times, flush=True)
+        results[name] = [B.measure(spark, [name], d, runs)[name]["min"] for d in SFS]
+        print(name, results[name], flush=True)
 
     lines = [
         "# SCALING — measured wall time vs input size",
         "",
-        "`tools/scaling_probe.py`: min-of-%d noop-sink wall seconds per scale"
+        "`tools/scaling_probe.py`: min-of-%d cold-start noop-sink wall seconds"
         % runs,
-        "point on local[32].  `input ×` is how much the query's input grows",
+        "per scale point on %s.  `input ×` is how much the query's input grows"
+        % spark.sparkContext.master,
         "sf0.001 → sf0.1; `time ×` is how much its wall time grew.  time × far",
         "below input × means the small-scale cost is fixed per-query overhead",
         "(session, planning, task dispatch) and the per-row cost is healthy —",
@@ -142,13 +130,13 @@ def main() -> None:
     # appended after the generated table: everything from the first
     # second-level heading onward survives regeneration
     try:
-        old = open("/root/repo/SCALING.md").read()
+        old = (ROOT / "SCALING.md").read_text()
         idx = old.find("\n## ")
         if idx != -1:
             lines.append(old[idx + 1 :])
     except FileNotFoundError:
         pass
-    with open("/root/repo/SCALING.md", "w") as f:
+    with open(ROOT / "SCALING.md", "w") as f:
         f.write("\n".join(lines))
     print("wrote SCALING.md")
 

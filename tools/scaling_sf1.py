@@ -34,12 +34,13 @@ from __future__ import annotations
 
 import os
 import sys
-import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 SRC = "/root/testdata/sf0.1"
-DST = "/root/repo/bench_sf1"
+DST = str(ROOT / "bench_sf1")
 COPIES = 10
 
 #: (key, output-relation description) — the eight >5s keys from the
@@ -171,7 +172,6 @@ def generate(spark) -> None:
 
 
 def main() -> None:
-    import __spark_entry__ as E
     import bench as B
     from buildkite_logs_parquet_spark.session import get_spark
 
@@ -181,26 +181,11 @@ def main() -> None:
         print("generating bench_sf1 ...", flush=True)
         generate(spark)
 
-    qs = dict(E.queries())
-    qs.update(B._extra_ops())
+    qs = B._all_queries()
     rows_out: dict[str, tuple[float, float, int, int]] = {}
     for name, _desc in HEAVY:
-        fn = qs[name]
-        walls = []
-        outs = []
-        for sf_dir in (SRC, DST):
-            E.release_query_caches()
-            spark.catalog.clearCache()
-            best = None
-            for _ in range(runs):
-                t0 = time.monotonic()
-                fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                dt = time.monotonic() - t0
-                best = dt if best is None else min(best, dt)
-            walls.append(round(best, 3))
-            outs.append(fn(spark, sf_dir).count())
+        walls = [B.measure(spark, [name], d, runs)[name]["min"] for d in (SRC, DST)]
+        outs = [qs[name](spark, d).count() for d in (SRC, DST)]
         rows_out[name] = (walls[0], walls[1], outs[0], outs[1])
         print(name, rows_out[name], flush=True)
 
@@ -213,7 +198,8 @@ def main() -> None:
         "deterministically under `bench_sf1/` (rotated-variant documents",
         "that preserve near-dup cliques, perturbed-variant embeddings that",
         "preserve ANN geometry, 10 disjoint graph copies; see the tool",
-        f"docstring).  min-of-{runs} noop-sink walls on local[32]; output",
+        f"docstring).  min-of-{runs} cold-start noop-sink walls on",
+        f"{spark.sparkContext.master}; output",
         "rows measured so superlinear walls read against output growth.",
         "",
         "| key | output relation | sf0.1 s | sf1 s | wall × | out rows sf0.1 | out rows sf1 | out × |",
@@ -229,7 +215,7 @@ def main() -> None:
     lines.append("")
     block = "\n".join(lines)
 
-    path = "/root/repo/SCALING.md"
+    path = ROOT / "SCALING.md"
     old = open(path).read()
     # strip the previous decade section whichever round named it
     for sec in (SECTION, "## sf1-equivalent decade (bench-generated, round 10)"):
