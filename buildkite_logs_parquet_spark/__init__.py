@@ -11,7 +11,7 @@ Layout:
   functions/   scalar expression builders (OSC parse, ANSI strip, classify)
   sources/     log line sources and Parquet read/write (tolerant schema)
   operators/   ingest pipeline, reference query ops, and the large-scale
-               training-data ops (dedup, similarity, text analysis, multimodal)
+               training-data ops (dedup, similarity, text analysis)
   streaming/   Structured Streaming follow-mode ingest
   plans/       plan-inspection helpers (pushdown/broadcast assertions)
 """

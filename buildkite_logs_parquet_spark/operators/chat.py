@@ -21,7 +21,7 @@ Pipeline shape::
 
 Rendered text then feeds the existing pre-training machinery: exact/near
 dedup on the render digest (``dedup``), tokenize (``text_analysis``/
-``wordpiece``/``unigram``), pack (``packing.pack_sequences``) — the spans
+``wordpiece``), pack (``packing.pack_sequences``) — the spans
 from ``assistant_spans`` travel alongside to become the loss mask after
 tokenization.
 """

@@ -1,7 +1,6 @@
 """WordPiece tokenization (Schuster & Nakajima 2012; Wu et al. 2016 —
-the BERT tokenizer family), completing the subword-tokenizer trio next
-to BPE (``text_analysis.learn_bpe``/``bpe_encode``) and the unigram LM
-(``unigram.py``).
+the BERT tokenizer family), next to BPE
+(``text_analysis.learn_bpe``/``bpe_encode``).
 
 Two halves, mirroring the BPE module's structure:
 

@@ -28,7 +28,7 @@ streaming write per shard — executor memory holds one Arrow batch at a
 time, never a whole shard; the reader parallelizes one task per tar.
 
 Reference parity note: no counterpart in the reference repo; this
-extends the brief's multimodal/training-export tier.
+extends the training-export tier.
 """
 
 from __future__ import annotations

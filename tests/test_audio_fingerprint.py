@@ -1,16 +1,8 @@
-"""MP3 metadata triage + Haitsma–Kalker audio fingerprint tests."""
+"""MP3 metadata triage: ``functions.audio_codec.mp3_info``."""
 
-import struct
-
-import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
-from buildkite_logs_parquet_spark.functions.audio_codec import (
-    encode_wav,
-    mp3_info,
-)
-from buildkite_logs_parquet_spark.operators import multimodal as MM
+from buildkite_logs_parquet_spark.functions.audio_codec import mp3_info
 
 
 def _mp3_frame(bitrate_idx=9, sr_idx=0, padding=0):
@@ -63,86 +55,3 @@ class TestMp3Info:
     def test_no_frames_raises(self):
         with pytest.raises(ValueError):
             mp3_info(b"not audio at all")
-
-    def test_triage_operator(self, spark):
-        rows = [(1, _mp3_frame() * 4), (2, b"garbage")]
-        df = spark.createDataFrame(rows, "media_id long, payload binary")
-        out = {r["media_id"]: r for r in MM.mp3_triage(df).collect()}
-        assert out[1]["parse_ok"] and out[1]["n_frames"] == 4
-        assert not out[2]["parse_ok"] and out[2]["n_frames"] is None
-
-
-def _tone_clip(freqs, sr=8000, seconds=1.0, amp=0.4, envelope=True):
-    t = np.arange(int(sr * seconds)) / sr
-    sig = sum(np.sin(2 * np.pi * f * t) * (1.0 + 0.3 * np.sin(2 * np.pi * i * t))
-              for i, f in enumerate(freqs, start=2))
-    sig = amp * sig / max(1e-9, np.max(np.abs(sig)))
-    samples = (sig * 32767).astype(np.int16).reshape(-1, 1)
-    return encode_wav(samples, sr)
-
-
-class TestAudioFingerprint:
-    def test_gain_invariance_and_discrimination(self, spark):
-        a = _tone_clip([440, 880, 1320])
-        a_quiet = _tone_clip([440, 880, 1320], amp=0.2)
-        other = _tone_clip([523, 1046, 2093])
-        df = spark.createDataFrame(
-            [(1, a), (2, a_quiet), (3, other)], "media_id long, payload binary"
-        )
-        fps = MM.audio_fingerprint(df)
-        pairs = {
-            (r["id_a"], r["id_b"]): r["ber"]
-            for r in MM.audio_fingerprint_near_dups(
-                fps, max_ber=1.0, min_frames=1, max_band_df=1000
-            ).collect()
-        }
-        same = pairs.get((1, 2), 1.0)
-        diff = min(pairs.get((1, 3), 1.0), pairs.get((2, 3), 1.0))
-        assert same < 0.25  # gain change barely perturbs sign bits
-        assert diff > 2 * same  # different content reads as noise
-        # the production threshold separates them
-        kept = MM.audio_fingerprint_near_dups(fps).collect()
-        assert {(r["id_a"], r["id_b"]) for r in kept} == {(1, 2)}
-
-    def test_frame_rows_shape(self, spark):
-        df = spark.createDataFrame(
-            [(7, _tone_clip([700]))], "media_id long, payload binary"
-        )
-        rows = MM.audio_fingerprint(df).collect()
-        # 1s @ 8kHz, n_fft 1024 hop 512 -> 14 frames, minus the delta row
-        assert len(rows) == 13
-        assert [r["frame_idx"] for r in rows] == list(range(13))
-        assert all(0 <= r["fp"] < 2**32 for r in rows)
-
-    def test_undecodable_yields_no_rows(self, spark):
-        df = spark.createDataFrame(
-            [(9, b"nope")], "media_id long, payload binary"
-        )
-        assert MM.audio_fingerprint(df).count() == 0
-
-    def test_near_dup_semantics(self, spark):
-        # clips 1,2: identical fps except one bit in frame 1 -> BER 1/96;
-        # clip 3: random-ish words, no shared band byte with 1 or 2
-        rows = [
-            (1, 0, 0x01020304), (1, 1, 0x05060708), (1, 2, 0x090A0B0C),
-            (2, 0, 0x01020304), (2, 1, 0x05060709), (2, 2, 0x090A0B0C),
-            (3, 0, 0x11121314), (3, 1, 0x15161718), (3, 2, 0x191A1B1D),
-        ]
-        fp_df = spark.createDataFrame(rows, "media_id long, frame_idx int, fp long")
-        out = MM.audio_fingerprint_near_dups(fp_df, min_frames=3)
-        got = {(r["id_a"], r["id_b"]): (r["n_frames"], r["ber"]) for r in out.collect()}
-        assert got == {(1, 2): (3, pytest.approx(1 / 96, abs=1e-6))}
-
-    def test_band_df_cap_drops_boilerplate(self, spark):
-        # every clip shares the all-zero word at frame 0 (silence); with
-        # the cap at 2 that band key is dropped and no candidates remain
-        rows = [(i, 0, 0) for i in range(1, 5)] + [
-            (i, 1, 0x10000000 * i) for i in range(1, 5)
-        ]
-        fp_df = spark.createDataFrame(rows, "media_id long, frame_idx int, fp long")
-        assert (
-            MM.audio_fingerprint_near_dups(
-                fp_df, max_ber=1.0, min_frames=1, max_band_df=2
-            ).count()
-            == 0
-        )

@@ -1,5 +1,5 @@
 """MJPEG-in-AVI: RIFF container walk, frame-independent selective
-decode, and the video_frames integration path.
+decode and the container's malformed-input guards.
 
 MJPEG frames are plain JPEGs, so AVI-extracted frames must decode
 BIT-IDENTICALLY to the same JPEG bytes decoded directly — that equality
@@ -95,26 +95,3 @@ def test_avi_header_only_parse_reports_frame_offsets():
     assert [s for _o, s in info["frames"]] == [len(j) for j in jpegs]
     for (off, size), j in zip(info["frames"], jpegs):
         assert avi[off : off + size] == j
-
-
-def test_video_frames_samples_mjpeg_avi(spark):
-    from buildkite_logs_parquet_spark.functions.image_codec import decode_png
-    from buildkite_logs_parquet_spark.operators.multimodal import video_frames
-
-    rng = np.random.default_rng(27)
-    px = _frames(rng, n=5, h=12, w=16)
-    avi = encode_avi_mjpeg([encode_jpeg(f, quality=90) for f in px], 16, 12)
-    df = spark.createDataFrame(
-        [(1, bytearray(avi))], "media_id long, payload binary"
-    )
-    rows = sorted(
-        video_frames(df, every_nth=2).collect(), key=lambda r: r.frame_index
-    )
-    assert [r.frame_index for r in rows] == [0, 2, 4]
-    assert all(r.decode_ok and r.n_frames == 5 for r in rows)
-    got = decode_png(bytes(rows[0].frame_payload))[:, :, 0]
-    dec = decode_jpeg(encode_jpeg(px[0], quality=90))
-    exp = (
-        0.299 * dec[:, :, 0] + 0.587 * dec[:, :, 1] + 0.114 * dec[:, :, 2]
-    ).astype(np.uint8)
-    assert (got == exp).all()

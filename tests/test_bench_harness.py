@@ -16,7 +16,7 @@ sys.path.insert(0, str(ROOT))
 import bench as B  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
-RUN_FIELDS = {"build_s", "exec_s", "jobs", "stages", "tasks"}
+RUN_FIELDS = {"build_s", "exec_s", "build_jobs", "jobs", "stages", "tasks"}
 
 
 def test_measure_cold_starts_every_run(spark):
@@ -56,6 +56,24 @@ def test_measure_counts_overlap_pool_jobs(spark):
     assert set(run) == RUN_FIELDS
     assert run["jobs"] == after - before - 1
     assert len(tracker.getJobIdsForGroup("measure-run")) < run["jobs"]
+    # the legs run inside the query function, so their jobs are build jobs
+    assert 0 < run["build_jobs"] < run["jobs"]
+
+
+def test_measure_build_jobs_zero_on_lazy_key(spark, monkeypatch):
+    """A key that only composes a plan runs every job in the noop write.
+    (Every registered key reads Parquet while it builds, and Spark's
+    Parquet schema inference runs one job, so the key here is built over
+    ``spark.range``.)"""
+    from pyspark.sql import functions as F
+
+    def lazy(spark, sf_dir):
+        return spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count()
+
+    monkeypatch.setattr(B, "_all_queries", lambda: {"lazy": lazy})
+    (run,) = B.measure(spark, ["lazy"], SF, runs=1)["lazy"]["runs"]
+    assert set(run) == RUN_FIELDS
+    assert run["build_jobs"] == 0 < run["jobs"]
 
 
 def test_no_hard_coded_checkout_path():

@@ -107,39 +107,3 @@ class TestStrip:
         xmp = b"\xff\xe1" + struct.pack(">H", 12) + b"http://xmp"
         jpeg = _jpeg_with(xmp)
         assert strip_exif(jpeg) == jpeg
-
-
-class TestSparkStage:
-    def test_summary_and_strip_end_to_end(self, spark):
-        import numpy as np
-
-        from buildkite_logs_parquet_spark.functions.jpeg_codec import (
-            encode_jpeg,
-        )
-        from buildkite_logs_parquet_spark.operators.multimodal import (
-            image_exif_summary,
-            strip_image_metadata,
-        )
-
-        rng = np.random.default_rng(9)
-        raw = encode_jpeg(
-            rng.integers(0, 255, size=(8, 8, 3), dtype=np.uint8)
-        )
-        tagged = raw[:2] + build_exif_app1(
-            make="ACME", gps=(10.0, 20.0)
-        ) + raw[2:]
-        media = spark.createDataFrame(
-            [(1, tagged), (2, raw), (3, b"not a jpeg")],
-            "media_id long, payload binary",
-        )
-        summ = {r["media_id"]: r for r in image_exif_summary(media).collect()}
-        assert summ[1]["has_gps"] and summ[1]["make"] == "ACME"
-        assert summ[2]["decode_ok"] and not summ[2]["has_gps"]
-        assert not summ[3]["decode_ok"]
-
-        out = {r["media_id"]: r for r in strip_image_metadata(media).collect()}
-        assert bytes(out[1]["payload"]) == raw and out[1]["stripped"]
-        assert bytes(out[2]["payload"]) == raw and not out[2]["stripped"]
-        # unparsable media passes through untouched, never destroyed
-        assert bytes(out[3]["payload"]) == b"not a jpeg"
-        assert not out[3]["stripped"]

@@ -1,6 +1,6 @@
 """FLAC codec: round-trips through every decoder path (the encoder is
-an independently-constructed bit stream), CRC/truncation rejection, the
-decode_audio dispatcher, and Spark-side ingestion via audio_features."""
+an independently-constructed bit stream), CRC/truncation rejection and
+the decode_audio dispatcher."""
 
 import numpy as np
 import pytest
@@ -132,30 +132,6 @@ class TestDispatcher:
         x = (_signal(200, amp=1000) << 8).astype(np.int64)  # 24-bit-ish
         _, got = decode_audio(encode_flac(x, 8000, bits_per_sample=24))
         np.testing.assert_array_equal(got[:, 0], (x[:, 0] >> 8).astype(np.int16))
-
-
-def test_audio_features_ingests_flac(spark):
-    """The Spark stage: FLAC payloads flow through audio_features next to
-    WAV ones, undecodable bytes quarantine."""
-    from buildkite_logs_parquet_spark.functions.audio_codec import encode_wav
-    from buildkite_logs_parquet_spark.operators import multimodal as M
-
-    x = _signal(800).astype(np.int16)
-    rows = [
-        (1, bytearray(encode_flac(x.astype(np.int64), 16000))),
-        (2, bytearray(encode_wav(x[:, 0], 16000))),
-        (3, bytearray(b"not audio at all")),
-    ]
-    media = spark.createDataFrame(rows, "media_id long, payload binary")
-    got = {
-        r["media_id"]: r
-        for r in M.audio_features(media).collect()
-    }
-    assert got[1]["decode_ok"] and got[2]["decode_ok"]
-    assert not got[3]["decode_ok"]
-    # identical samples ⇒ identical features regardless of container
-    for k in ("sample_rate", "n_samples", "rms", "zero_crossing_rate"):
-        assert got[1][k] == got[2][k], k
 
 
 class TestAdvancedPaths:

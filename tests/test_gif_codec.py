@@ -1,6 +1,5 @@
 """GIF codec: LZW, interlace, animation compositing, disposal,
-transparency — plus the decode_image / real_decode / video_frames
-integration seams.
+transparency — plus the decode_image dispatch seam.
 
 GIF is lossless over palette pixels, so every round-trip assertion is
 EXACT equality, and a hand-crafted byte stream (independent of our
@@ -168,46 +167,3 @@ def test_decode_image_dispatches_gif_first_frame():
     img = decode_image(encode_gif(fs))
     assert img.shape == (10, 12, 3)
     assert (img == fs[0]).all()
-
-
-def test_real_decode_reports_gif_frame_count():
-    from buildkite_logs_parquet_spark.operators.multimodal import real_decode
-
-    rng = np.random.default_rng(17)
-    fs = [_rand_palette_img(rng, 10, 12) for _ in range(5)]
-    feats = real_decode(encode_gif(fs))
-    assert (feats["width"], feats["height"], feats["n_frames"]) == (12, 10, 5)
-    # feature comes from frame 0's actual pixels
-    exp = float(fs[0].astype("float64").mean()) / 255.0
-    assert feats["feature"][0] == pytest.approx(exp, abs=1e-6)
-
-
-def test_video_frames_samples_animated_gif(spark):
-    """Animated GIF payloads ride the video sampling operator: every Nth
-    composited frame comes out as a PNG-encoded luma row."""
-    from buildkite_logs_parquet_spark.functions.image_codec import decode_png
-    from buildkite_logs_parquet_spark.operators.multimodal import video_frames
-
-    rng = np.random.default_rng(18)
-    fs = [_rand_palette_img(rng, 12, 16) for _ in range(5)]
-    gif = encode_gif(fs)
-    df = spark.createDataFrame(
-        [(1, bytearray(gif)), (2, bytearray(b"not media"))],
-        "media_id long, payload binary",
-    )
-    rows = video_frames(df, every_nth=2).collect()
-    good = sorted(
-        [r for r in rows if r.decode_ok], key=lambda r: r.frame_index
-    )
-    bad = [r for r in rows if not r.decode_ok]
-    assert [r.frame_index for r in good] == [0, 2, 4]
-    assert all(r.n_frames == 5 for r in good)
-    assert len(bad) == 1 and bad[0].media_id == 2
-    # luma of the sampled frame matches the composited RGB frame
-    luma0 = decode_png(bytes(good[0].frame_payload))[:, :, 0]
-    exp = (
-        0.299 * fs[0][:, :, 0]
-        + 0.587 * fs[0][:, :, 1]
-        + 0.114 * fs[0][:, :, 2]
-    ).astype(np.uint8)
-    assert (luma0 == exp).all()

@@ -1,6 +1,5 @@
 """Image codec tests: PNG/PPM decode from specification, committed golden
-fixtures, and the real_decode path through the Arrow-batched multimodal
-stage."""
+fixtures, JPEG baseline/progressive decode and BMP."""
 
 import os
 
@@ -300,46 +299,6 @@ def test_jpeg_sof_variants_stay_behind_the_seam():
 
 
 # ------------------------------------------- real_decode through the stage
-
-
-def test_real_decode_features_from_actual_pixels():
-    from buildkite_logs_parquet_spark.operators.multimodal import real_decode
-
-    red = np.zeros((4, 8, 3), np.uint8)
-    red[:, :, 0] = 200
-    feats = real_decode(encode_png(red))
-    assert (feats["width"], feats["height"], feats["n_frames"]) == (8, 4, 1)
-    r, g, b = feats["feature"][2:5]
-    assert r == pytest.approx(200 / 255, abs=1e-6)
-    assert g == 0.0 and b == 0.0
-    assert feats["feature"][5] == pytest.approx(8 / 12, abs=1e-6)  # aspect
-    assert real_decode(None)["width"] is None
-
-
-def test_extract_features_with_real_decoder_on_spark(spark):
-    """Integration: PNG payloads through the Arrow-batched mapInPandas
-    stage with the REAL decoder — identical images get identical features,
-    different images differ, and dimensions come from true pixel data."""
-    from buildkite_logs_parquet_spark.operators import multimodal as M
-
-    rng = np.random.default_rng(3)
-    img_a = rng.integers(0, 256, (6, 9, 3), dtype=np.uint8)
-    img_b = rng.integers(0, 256, (3, 2, 3), dtype=np.uint8)
-    rows = [
-        (0, bytearray(encode_png(img_a))),
-        (1, bytearray(encode_png(img_a, row_filters=[4] * 6))),  # same pixels
-        (2, bytearray(encode_png(img_b))),
-    ]
-    df = spark.createDataFrame(rows, "media_id long, payload binary")
-    media = M.attach_media_meta(df, media_type="image", fmt="png")
-    out = {
-        r["media_id"]: r
-        for r in M.extract_features(media, decode=M.real_decode).collect()
-    }
-    assert (out[0]["width"], out[0]["height"]) == (9, 6)
-    assert list(out[0]["feature"]) == list(out[1]["feature"])  # pixel-equal
-    assert list(out[0]["feature"]) != list(out[2]["feature"])
-    assert (out[2]["width"], out[2]["height"]) == (2, 3)
 
 
 # --------------------------------------------------------------- BMP

@@ -1,6 +1,6 @@
 """MP3 Layer-III structure codec (functions/mp3_codec.py): header and
 side-info round-trips, CRC protection, bit-reservoir resolution, split
-points, Xing, and the Spark operator layer.
+points and Xing.
 
 Fixtures are CONSTRUCTED, not decoded-and-trusted: the module ships the
 serializer twin (build_frame_header / write_side_info / BitWriter), so
@@ -316,42 +316,6 @@ class TestXing:
     def test_absent_xing_is_none(self):
         data = _mk_frame(bitrate_kbps=128, sample_rate=44100)
         assert parse_xing(data, walk_frames(data)[0]) is None
-
-
-class TestSparkOperators:
-    def test_mp3_frames_and_split_points(self, spark):
-        from pyspark.sql import functions as F
-
-        from buildkite_logs_parquet_spark.operators.multimodal import (
-            mp3_frames,
-            mp3_split_points,
-        )
-
-        clip = (
-            _mk_frame(main_data_begin=0, part2_3=10, channel_mode=0,
-                      bitrate_kbps=128, sample_rate=44100)
-            + _mk_frame(main_data_begin=100, part2_3=20, channel_mode=0,
-                        bitrate_kbps=128, sample_rate=44100)
-            + _mk_frame(main_data_begin=0, part2_3=0, channel_mode=0,
-                        bitrate_kbps=128, sample_rate=44100)
-        )
-        media = spark.createDataFrame(
-            [(1, bytearray(clip)), (2, bytearray(b"not an mp3"))],
-            "media_id long, payload binary",
-        )
-        out = mp3_frames(media).orderBy("media_id", "frame_idx")
-        rows = out.collect()
-        assert [r["media_id"] for r in rows] == [1, 1, 1]  # clip 2 quarantined
-        assert [r["is_split_point"] for r in rows] == [True, False, True]
-        assert [r["resolved"] for r in rows] == [True, True, True]
-        assert rows[1]["part2_3_bits"] == 80
-        assert rows[0]["sample_rate"] == 44100 and rows[0]["n_channels"] == 2
-        sp = mp3_split_points(out).orderBy("frame_idx").collect()
-        assert [r["byte_offset"] for r in sp] == [0, 834]
-        # the operator is a narrow map: no shuffle in the (un-ordered) plan
-        plain = mp3_frames(media)
-        plan2 = plain._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan2
 
 
 class TestResyncGapInvalidatesReservoir:

@@ -1,133 +1,9 @@
-"""Multimodal plumbing tests: schemas, Arrow-batched decode stage, stubs."""
+"""WAV decode paths of ``functions.audio_codec``: PCM, IMA ADPCM and G.711."""
 
 import pytest
-from pyspark.sql import functions as F
-
-from buildkite_logs_parquet_spark.operators import multimodal as M
-
-
-@pytest.fixture(scope="module")
-def media(spark):
-    rows = [
-        (0, b"\x89PNG fake payload 0", "file:///img0.png"),
-        (1, b"\x89PNG fake payload 1", "file:///img1.png"),
-        (2, None, "file:///missing.png"),
-    ]
-    df = spark.createDataFrame(
-        rows, "media_id long, payload binary, uri string"
-    )
-    return M.attach_media_meta(df, media_type="image", fmt="png", uri_col="uri").cache()
-
-
-def test_meta_struct(spark, media):
-    row = media.orderBy("media_id").first()
-    assert row["meta"]["media_type"] == "image"
-    assert row["meta"]["format"] == "png"
-    assert row["meta"]["byte_size"] == len(b"\x89PNG fake payload 0")
-    null_row = media.where(F.col("media_id") == 2).first()
-    assert null_row["meta"]["byte_size"] == 0
-
-
-def test_extract_features_deterministic(spark, media):
-    a = {r["media_id"]: r.asDict() for r in M.extract_features(media).collect()}
-    b = {r["media_id"]: r.asDict() for r in M.extract_features(media).collect()}
-    assert a == b  # deterministic fake decode
-    assert a[0]["width"] is not None and len(a[0]["feature"]) == 8
-    assert a[2]["width"] is None  # null payload → null features
-    assert a[0]["feature"] != a[1]["feature"]
-
-
-def test_strict_decode_is_marked_stub(spark, media):
-    with pytest.raises(Exception, match="NotImplementedError|real media decoding"):
-        M.extract_features(media, decode=M.strict_decode).collect()
-
-
-def test_frame_sample_plan(spark, media):
-    frames = M.frame_sample_plan(media, every_nth=2).collect()
-    feats = {r["media_id"]: r for r in M.extract_features(media).collect()}
-    for mid in (0, 1):
-        expect = [i for i in range(feats[mid]["n_frames"]) if i % 2 == 0]
-        got = sorted(r["frame_index"] for r in frames if r["media_id"] == mid)
-        assert got == expect
-
-
-def test_embed_media_deterministic_unit_vectors(spark, media):
-    import math
-
-    a = {r["media_id"]: list(r["embedding"]) for r in M.embed_media(media).collect()}
-    b = {r["media_id"]: list(r["embedding"]) for r in M.embed_media(media).collect()}
-    assert a == b  # deterministic fake: same payload → same embedding
-    for v in a.values():
-        assert len(v) == 64
-        assert abs(math.sqrt(sum(x * x for x in v)) - 1.0) < 1e-5
-
-
-def test_embed_media_feeds_the_ann_stack(spark, media):
-    """The multimodal bridge: binary payloads → embeddings → exact and
-    LSH-bucketed similarity, end to end with no schema glue."""
-    from buildkite_logs_parquet_spark.operators import similarity as S
-
-    emb = M.embed_media(media)
-    qvec = [float(x) for x in emb.orderBy("media_id").first()["embedding"]]
-    top = S.cosine_topk(
-        emb, qvec, k=2, id_col="media_id", vec_col="embedding", round_to=None
-    ).collect()
-    assert top[0]["cosine"] > 0.999  # the query row itself ranks first
-    bucketed = S.hyperplane_buckets(emb, "embedding", dim=64, n_planes=8)
-    assert bucketed.where(F.col("bucket").isNull()).count() == 0
-
-
-def test_media_to_semantic_dedup_end_to_end(spark):
-    """Full multimodal dedup path: payloads → embed_media → SemDeDup.
-    Duplicate payloads produce identical embeddings (cosine 1.0), so
-    semantic_dedup must mark every later copy a dup while distinct
-    payloads survive."""
-    import random
-
-    from buildkite_logs_parquet_spark.operators.similarity import semantic_dedup
-
-    rows = [(i, f"payload-{i % 4}".encode(), f"file:///m{i}.png") for i in range(12)]
-    df = spark.createDataFrame(rows, "media_id long, payload binary, uri string")
-    media = M.attach_media_meta(df, media_type="image", fmt="png", uri_col="uri")
-    emb = M.embed_media(media, dim=16)
-
-    rng = random.Random(3)
-    centroids = [[rng.gauss(0, 1) for _ in range(16)] for _ in range(2)]
-    out = {
-        r["vec_id"]: r["is_semantic_dup"]
-        for r in semantic_dedup(
-            emb.withColumnRenamed("media_id", "vec_id"),
-            centroids,
-            threshold=0.999,
-        ).collect()
-    }
-    # ids 0..3 are the first occurrences of the 4 distinct payloads;
-    # 4..11 repeat them and must all be flagged
-    assert set(out) == set(range(12))
-    for i in range(4):
-        assert not out[i], i
-    for i in range(4, 12):
-        assert out[i], i
 
 
 class TestAudio:
-    def _wav_df(self, spark):
-        import numpy as np
-        from buildkite_logs_parquet_spark.functions.audio_codec import encode_wav
-
-        sr = 8000
-        t = np.arange(sr)  # 1 second
-        sine = (10000 * np.sin(2 * np.pi * 100 * t / sr)).astype(np.int16)
-        silence = np.zeros(sr // 2, dtype=np.int16)
-        stereo = np.stack([sine, sine // 2], axis=1)
-        rows = [
-            (1, bytearray(encode_wav(sine, sr))),
-            (2, bytearray(encode_wav(silence, sr))),
-            (3, bytearray(encode_wav(stereo, sr))),
-            (4, bytearray(b"not a wav")),
-        ]
-        return spark.createDataFrame(rows, "media_id long, payload binary")
-
     def test_codec_round_trip(self):
         import numpy as np
         from buildkite_logs_parquet_spark.functions.audio_codec import (
@@ -140,189 +16,6 @@ class TestAudio:
         got_sr, got = decode_wav(encode_wav(samples, sr))
         assert got_sr == sr
         assert np.array_equal(got[:, 0], samples)
-
-    def test_audio_features(self, spark):
-        import math
-
-        from buildkite_logs_parquet_spark.operators.multimodal import (
-            audio_features,
-        )
-
-        out = {r["media_id"]: r for r in audio_features(self._wav_df(spark)).collect()}
-        sine = out[1]
-        assert sine["decode_ok"] and sine["sample_rate"] == 8000
-        assert sine["n_samples"] == 8000 and sine["n_channels"] == 1
-        assert sine["duration_ms"] == pytest.approx(1000.0)
-        # RMS of a sine = amplitude/sqrt(2); zcr = 2f/sr
-        assert sine["rms"] == pytest.approx((10000 / 32768.0) / math.sqrt(2), rel=1e-3)
-        assert sine["zero_crossing_rate"] == pytest.approx(2 * 100 / 8000, rel=1e-2)
-        assert out[2]["rms"] == 0.0
-        assert out[3]["n_channels"] == 2
-        # corrupt payload quarantines, never throws
-        assert out[4]["decode_ok"] is False and out[4]["rms"] is None
-
-    def test_audio_frame_windows(self, spark):
-        from buildkite_logs_parquet_spark.operators.multimodal import (
-            audio_frame_windows,
-        )
-
-        df = self._wav_df(spark).where("media_id = 1")
-        rows = audio_frame_windows(df, window_ms=25, hop_ms=10).orderBy(
-            "window_index"
-        ).collect()
-        # 1s clip, 25ms window, 10ms hop: floor((8000-200)/80)+1 windows
-        assert len(rows) == (8000 - 200) // 80 + 1
-        assert rows[0]["start_ms"] == 0.0
-        assert rows[1]["start_ms"] == pytest.approx(10.0)
-        assert all(r["rms"] > 0 for r in rows)
-        # determinism
-        again = audio_frame_windows(df, window_ms=25, hop_ms=10).collect()
-        assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
-
-
-def test_video_codec_round_trip():
-    import numpy as np
-
-    from buildkite_logs_parquet_spark.functions.video_codec import (
-        decode_y4m,
-        encode_y4m,
-    )
-
-    rng = np.random.default_rng(5)
-    frames = [
-        rng.integers(0, 256, size=(8, 12), dtype=np.uint8) for _ in range(5)
-    ]
-    data = encode_y4m(frames, fps=(30, 1))
-    hdr, back = decode_y4m(data)
-    assert hdr["width"] == 12 and hdr["height"] == 8
-    assert hdr["n_frames"] == 5 and hdr["fps_num"] == 30
-    assert all((a == b).all() for a, b in zip(frames, back))
-
-    # selective decode returns exactly the requested frames
-    hdr2, some = decode_y4m(data, frame_indices=[0, 3])
-    assert hdr2["n_frames"] == 5
-    assert (some[0] == frames[0]).all() and (some[1] == frames[3]).all()
-
-
-def test_video_frames_samples_and_feeds_image_pipeline(spark):
-    import numpy as np
-
-    from buildkite_logs_parquet_spark.functions.image_codec import decode_image
-    from buildkite_logs_parquet_spark.functions.video_codec import encode_y4m
-    from buildkite_logs_parquet_spark.operators.multimodal import video_frames
-
-    rng = np.random.default_rng(9)
-    vids = []
-    for mid, n in ((1, 6), (2, 3)):
-        frames = [
-            np.full((4, 6), 10 * mid + i, dtype=np.uint8) for i in range(n)
-        ]
-        vids.append((mid, bytearray(encode_y4m(frames))))
-    vids.append((3, bytearray(b"not a video")))
-    media = spark.createDataFrame(vids, "media_id long, payload binary")
-
-    out = video_frames(media, every_nth=2).collect()
-    rows = [(r["media_id"], r["frame_index"]) for r in out if r["decode_ok"]]
-    assert sorted(rows) == [(1, 0), (1, 2), (1, 4), (2, 0), (2, 2)]
-    bad = [r for r in out if not r["decode_ok"]]
-    assert len(bad) == 1 and bad[0]["media_id"] == 3
-
-    # frame payloads are REAL PNGs the image codec decodes back
-    by = {(r["media_id"], r["frame_index"]): r for r in out if r["decode_ok"]}
-    r = by[(1, 2)]
-    img = decode_image(bytes(r["frame_payload"]))
-    assert img.shape[:2] == (4, 6)
-    assert int(img.reshape(-1)[0]) == 12  # frame value = 10*mid + index
-    assert r["mean_luma"] == 12.0 and r["n_frames"] == 6
-
-
-def test_jpeg_ingest_through_real_decoder(spark):
-    """The multimodal stage ingests actual JPEGs: the committed 4:2:0
-    fixture plus encoder-produced JPEGs flow through the Arrow-batched
-    mapInPandas stage with the pure-stdlib baseline decoder — dimensions
-    and features come from true pixels, and a JPEG and a PNG of the SAME
-    image land on near-identical features (lossy-but-close), so JPEG
-    crawl media feeds the same dedup/similarity stack as everything
-    else."""
-    import os
-
-    import numpy as np
-
-    from buildkite_logs_parquet_spark.functions.image_codec import encode_png
-    from buildkite_logs_parquet_spark.functions.jpeg_codec import encode_jpeg
-    from buildkite_logs_parquet_spark.operators.multimodal import real_decode
-
-    fixture = open(
-        os.path.join(os.path.dirname(__file__), "fixtures", "logo_16x16.jpg"),
-        "rb",
-    ).read()
-    img = np.zeros((12, 20, 3), np.uint8)
-    img[:, :, 0] = np.linspace(20, 240, 20, dtype=np.uint8)[None, :]
-    img[:, :, 1] = 90
-    img[:, :, 2] = np.linspace(240, 20, 12, dtype=np.uint8)[:, None]
-    rows = [
-        (0, bytearray(fixture)),
-        (1, bytearray(encode_jpeg(img, quality=95, subsample=True))),
-        (2, bytearray(encode_png(img))),
-    ]
-    media = M.attach_media_meta(
-        spark.createDataFrame(rows, "media_id long, payload binary"),
-        media_type="image",
-        fmt="jpeg",
-    )
-    out = {
-        r["media_id"]: r
-        for r in M.extract_features(media, decode=real_decode).collect()
-    }
-    assert (out[0]["width"], out[0]["height"]) == (16, 16)
-    assert (out[1]["width"], out[1]["height"]) == (20, 12)
-    fj = np.array(out[1]["feature"])
-    fp = np.array(out[2]["feature"])
-    assert np.abs(fj - fp).max() < 0.02
-    # the embedding bridge runs over the same JPEG payloads
-    emb = M.embed_media(media)
-    assert emb.count() == 3
-    assert len(emb.first()["embedding"]) == 64
-
-
-def test_video_to_embedding_dedup_pipeline(spark):
-    """End-to-end multimodal composition: Y4M video → sampled frames
-    (real PNGs) → embed_media → near-identical frames collapse.  Two
-    videos share an identical frame; its two PNG payloads are
-    byte-identical, so their (payload-deterministic) embeddings match
-    exactly and the dedup pair surfaces."""
-    import numpy as np
-
-    from buildkite_logs_parquet_spark.functions.video_codec import encode_y4m
-    from buildkite_logs_parquet_spark.operators import multimodal as M
-    from buildkite_logs_parquet_spark.operators.multimodal import video_frames
-    from buildkite_logs_parquet_spark.operators.similarity import cosine_topk
-
-    shared = np.full((4, 6), 200, dtype=np.uint8)
-    vids = [
-        (1, bytearray(encode_y4m([shared, np.zeros((4, 6), np.uint8)]))),
-        (2, bytearray(encode_y4m([np.full((4, 6), 7, np.uint8), shared]))),
-    ]
-    media = spark.createDataFrame(vids, "media_id long, payload binary")
-    frames = video_frames(media, every_nth=1).where("decode_ok")
-    # frame rows become media rows: composite id, PNG payload
-    as_media = frames.selectExpr(
-        "media_id * 100 + frame_index as media_id",
-        "frame_payload as payload",
-    )
-    emb = M.embed_media(as_media)
-    assert emb.count() == 4
-    by = {r["media_id"]: list(r["embedding"]) for r in emb.collect()}
-    # the shared frame (video1 frame0 = id 100, video2 frame1 = id 201)
-    # embeds identically; the others differ
-    assert by[100] == by[201]
-    assert by[100] != by[101]
-
-    # and the ANN stack finds it: top-1 neighbor of id 100 is 201
-    got = cosine_topk(
-        emb.where("media_id != 100"), by[100], k=1, id_col="media_id"
-    ).first()
-    assert got["media_id"] == 201
 
 
 class TestImaAdpcm:
@@ -384,31 +77,6 @@ class TestImaAdpcm:
         starts = np.arange(0, len(sig), spb)
         assert (got[starts, 0] == sig[starts]).all()
 
-    def test_adpcm_flows_through_audio_features(self, spark):
-        import math
-
-        import numpy as np
-
-        from buildkite_logs_parquet_spark.functions.audio_codec import (
-            encode_wav_ima_adpcm,
-        )
-        from buildkite_logs_parquet_spark.operators.multimodal import (
-            audio_features,
-        )
-
-        t = np.arange(8000)
-        sine = (10000 * np.sin(2 * np.pi * 100 * t / 8000)).astype(np.int16)
-        df = spark.createDataFrame(
-            [(1, bytearray(encode_wav_ima_adpcm(sine, 8000)))],
-            "media_id long, payload binary",
-        )
-        row = audio_features(df).collect()[0]
-        assert row["decode_ok"] and row["sample_rate"] == 8000
-        assert row["n_samples"] == 8000
-        assert row["rms"] == pytest.approx(
-            (10000 / 32768.0) / math.sqrt(2), rel=2e-2
-        )
-
     def test_adpcm_stereo_stays_behind_the_seam(self):
         import numpy as np
         import struct
@@ -425,150 +93,6 @@ class TestImaAdpcm:
         payload[pos + 2 : pos + 4] = struct.pack("<H", 2)  # channels = 2
         with pytest.raises(NotImplementedError, match="mono only"):
             decode_wav(bytes(payload))
-
-
-class TestPerceptualHash:
-    """dHash visual dedup: robust to lossy re-encoding, discriminative
-    across different images, banded pairs through the SimHash join."""
-
-    def _media(self, spark):
-        import numpy as np
-
-        from buildkite_logs_parquet_spark.functions.image_codec import (
-            encode_png,
-        )
-        from buildkite_logs_parquet_spark.functions.jpeg_codec import (
-            encode_jpeg,
-        )
-
-        rng = np.random.default_rng(6)
-        base = rng.integers(0, 256, (32, 48, 3)).astype(np.uint8)
-        for _ in range(4):  # smooth: recompression stays visually equal
-            base = (
-                (
-                    base.astype(int)
-                    + np.roll(base, 1, 0)
-                    + np.roll(base, 1, 1)
-                    + np.roll(base, -1, 0)
-                    + np.roll(base, -1, 1)
-                )
-                // 5
-            ).astype(np.uint8)
-        other = rng.integers(0, 256, (32, 48, 3)).astype(np.uint8)
-        rows = [
-            (1, bytearray(encode_png(base))),
-            (2, bytearray(encode_jpeg(base, quality=90))),
-            (3, bytearray(encode_png(other))),
-            (4, bytearray(b"not an image")),
-        ]
-        return spark.createDataFrame(rows, "media_id long, payload binary")
-
-    def test_hash_invariance_and_discrimination(self, spark):
-        from buildkite_logs_parquet_spark.operators.multimodal import (
-            perceptual_hash,
-        )
-
-        ph = {
-            r["media_id"]: r
-            for r in perceptual_hash(self._media(spark)).collect()
-        }
-        assert ph[4]["decode_ok"] is False and ph[4]["phash"] is None
-        same = bin(ph[1]["phash"] ^ ph[2]["phash"]).count("1")
-        diff = bin(ph[1]["phash"] ^ ph[3]["phash"]).count("1")
-        assert same <= 6  # lossy re-encode: a few gradient flips at most
-        assert diff >= 16  # unrelated image: far in hash space
-
-    def test_image_near_dups_pairs_only_the_recompression(self, spark):
-        from buildkite_logs_parquet_spark.operators.multimodal import (
-            image_near_dups,
-        )
-
-        pairs = image_near_dups(self._media(spark), max_hamming=6).collect()
-        assert [(p["id_a"], p["id_b"]) for p in pairs] == [(1, 2)]
-        assert pairs[0]["hamming"] <= 6
-
-    def test_dhash_handpinned_gradients(self):
-        """Exact bit semantics on a constructed 8x9 image: strictly
-        increasing rows → every left-pixel < right-pixel → all bits 0;
-        strictly decreasing → all bits 1 → hash -1 as signed 64-bit."""
-        import numpy as np
-
-        from buildkite_logs_parquet_spark.operators.multimodal import _dhash64
-
-        inc = np.tile(
-            (np.arange(9, dtype=np.uint8) * 20)[None, :, None], (8, 1, 3)
-        )
-        assert _dhash64(inc) == 0
-        dec = inc[:, ::-1]
-        assert _dhash64(dec) == -1  # all 64 bits set, two's complement
-
-
-class TestDecoderDependencyPolicy:
-    """auto_decode: native codecs first, optional executor-side Pillow
-    for formats outside the native set, dependency-hint error otherwise."""
-
-    def _png(self):
-        import numpy as np
-
-        from buildkite_logs_parquet_spark.functions.image_codec import (
-            encode_png,
-        )
-
-        img = np.zeros((4, 6, 3), dtype="uint8")
-        img[:, :, 0] = 200
-        return encode_png(img), img
-
-    def test_native_formats_bypass_external(self):
-        from buildkite_logs_parquet_spark.operators import multimodal as M
-
-        payload, _ = self._png()
-        assert M.auto_decode(payload) == M.real_decode(payload)
-
-    def test_exotic_format_without_pil_raises_hint(self, monkeypatch):
-        from buildkite_logs_parquet_spark.operators import multimodal as M
-
-        monkeypatch.setattr(M, "_PIL_CACHE", [])
-        webp = b"RIFF\x00\x00\x00\x00WEBPVP8 "
-        with pytest.raises(NotImplementedError, match="Pillow"):
-            M.auto_decode(webp)
-
-    def test_exotic_format_routes_to_injected_pil(self, monkeypatch):
-        import numpy as np
-
-        from buildkite_logs_parquet_spark.operators import multimodal as M
-
-        arr = np.full((4, 6, 3), 100, dtype="uint8")
-
-        class FakeImage:
-            n_frames = 3
-
-            def convert(self, mode):
-                assert mode == "RGB"
-                return arr
-
-            def __enter__(self):
-                return self
-
-            def __exit__(self, *a):
-                return False
-
-        class FakeImageModule:
-            @staticmethod
-            def open(fh):
-                return FakeImage()
-
-        monkeypatch.setattr(M, "_PIL_CACHE", [FakeImageModule])
-        got = M.auto_decode(b"RIFF....WEBPVP8 ")
-        assert (got["width"], got["height"], got["n_frames"]) == (6, 4, 3)
-        # same feature pipeline as the native path: identical pixels ⇒
-        # identical embedding regardless of which codec produced them
-        want = M._pixel_features(arr, 3)
-        assert got == want
-
-    def test_none_payload_is_null_row(self):
-        from buildkite_logs_parquet_spark.operators import multimodal as M
-
-        assert M.external_image_decode(None)["feature"] is None
 
 
 class TestG711:
@@ -650,121 +174,3 @@ class TestG711:
         _, got = decode_wav(self._riff(0x0007, 2, 8000, inter))
         assert got.shape == (100, 2)
         np.testing.assert_array_equal(got[:, 0], got[:, 1])
-
-
-class TestResizeImages:
-    def _media(self, spark, imgs):
-        import numpy as np
-
-        from buildkite_logs_parquet_spark.functions.image_codec import (
-            encode_png,
-        )
-
-        rows = [
-            (i, bytearray(encode_png(np.asarray(img, dtype=np.uint8))))
-            for i, img in enumerate(imgs)
-        ]
-        return spark.createDataFrame(rows, "media_id long, payload binary")
-
-    def test_exact_box_resize_round_trips(self, spark):
-        import numpy as np
-
-        from buildkite_logs_parquet_spark.functions.image_codec import (
-            decode_image,
-        )
-        from buildkite_logs_parquet_spark.operators.multimodal import (
-            _resize_area,
-            resize_images,
-        )
-
-        rng = np.random.default_rng(3)
-        imgs = [rng.integers(0, 256, (24, 36, 3)), rng.integers(0, 256, (7, 5, 3))]
-        out = {
-            r["media_id"]: r
-            for r in resize_images(
-                self._media(spark, imgs), width=8, height=8
-            ).collect()
-        }
-        for i, img in enumerate(imgs):
-            r = out[i]
-            assert r["decode_ok"] and (r["out_w"], r["out_h"]) == (8, 8)
-            assert (r["in_w"], r["in_h"]) == (img.shape[1], img.shape[0])
-            got = decode_image(bytes(r["payload"]))
-            want = _resize_area(np.asarray(img, dtype=np.uint8), 8, 8)
-            assert got.shape == (8, 8, 3)
-            assert (got == want).all()
-
-    def test_keep_aspect_fits_box_and_preserves_ratio(self, spark):
-        import numpy as np
-
-        from buildkite_logs_parquet_spark.operators.multimodal import (
-            resize_images,
-        )
-
-        # 40x20 landscape into a 16x16 box -> 16x8
-        img = np.zeros((20, 40, 3), dtype=np.uint8)
-        (r,) = resize_images(
-            self._media(spark, [img]), width=16, height=16, keep_aspect=True
-        ).collect()
-        assert (r["out_w"], r["out_h"]) == (16, 8)
-        # 20x40 portrait -> 8x16
-        img2 = np.zeros((40, 20, 3), dtype=np.uint8)
-        (r2,) = resize_images(
-            self._media(spark, [img2]), width=16, height=16, keep_aspect=True
-        ).collect()
-        assert (r2["out_w"], r2["out_h"]) == (8, 16)
-
-    def test_undecodable_payload_quarantined(self, spark):
-        df = spark.createDataFrame(
-            [(0, bytearray(b"not an image"))], "media_id long, payload binary"
-        )
-        from buildkite_logs_parquet_spark.operators.multimodal import (
-            resize_images,
-        )
-
-        (r,) = resize_images(df).collect()
-        assert r["decode_ok"] is False and r["payload"] is None
-
-    def test_custom_payload_col_names_output_column(self, spark):
-        """resize_images must name its output binary column after
-        payload_col (module convention, cf. strip_image_metadata) — not
-        hardcode 'payload'."""
-        import numpy as np
-
-        from buildkite_logs_parquet_spark.functions.image_codec import (
-            decode_image,
-            encode_png,
-        )
-        from buildkite_logs_parquet_spark.operators.multimodal import (
-            resize_images,
-        )
-
-        img = np.full((6, 4, 3), 9, dtype=np.uint8)
-        df = spark.createDataFrame(
-            [(0, bytearray(encode_png(img)))], "media_id long, img_bytes binary"
-        )
-        out = resize_images(df, payload_col="img_bytes", width=2, height=3)
-        assert "img_bytes" in out.columns and "payload" not in out.columns
-        (r,) = out.collect()
-        assert r["decode_ok"] and decode_image(bytes(r["img_bytes"])).shape == (
-            3,
-            2,
-            3,
-        )
-
-    def test_constant_image_resizes_to_constant(self, spark):
-        import numpy as np
-
-        from buildkite_logs_parquet_spark.functions.image_codec import (
-            decode_image,
-        )
-        from buildkite_logs_parquet_spark.operators.multimodal import (
-            resize_images,
-        )
-
-        img = np.full((17, 13, 3), 77, dtype=np.uint8)
-        (r,) = resize_images(
-            self._media(spark, [img]), width=5, height=9
-        ).collect()
-        got = decode_image(bytes(r["payload"]))
-        assert (got == 77).all() and got.shape == (9, 5, 3)

@@ -1,5 +1,5 @@
 """PDF text extraction: round trips against the independent fixture
-writer, string-syntax edge cases, filters, quarantine, Spark stage."""
+writer, string-syntax edge cases, filters, quarantine."""
 
 import zlib
 
@@ -93,68 +93,3 @@ class TestRejection:
         )
         with pytest.raises(NotImplementedError):
             extract_pdf_text(raw)
-
-
-def test_pdf_text_features_spark_stage(spark):
-    from buildkite_logs_parquet_spark.operators.multimodal import (
-        pdf_text_features,
-    )
-
-    rows = [
-        (1, bytearray(make_simple_pdf(["alpha doc", "beta page"]))),
-        (2, bytearray(b"junk bytes")),
-        (3, bytearray(make_simple_pdf(["gamma"], compress=False))),
-    ]
-    media = spark.createDataFrame(rows, "media_id long, payload binary")
-    got = {r["media_id"]: r for r in pdf_text_features(media).collect()}
-    assert got[1]["decode_ok"] and got[1]["n_pages"] == 2
-    assert "alpha doc" in got[1]["text"] and "beta page" in got[1]["text"]
-    assert not got[2]["decode_ok"] and got[2]["text"] is None
-    assert got[3]["decode_ok"] and got[3]["text"].strip() == "gamma"
-
-
-def test_follow_document_dir_streams_new_pdfs(spark, tmp_path):
-    """Streaming drop-directory intake: files present at start are
-    extracted; a later arrival lands in the next availableNow run with
-    the SAME media_id derivation (path hash — replay-stable)."""
-    import time
-
-    from buildkite_logs_parquet_spark.operators.multimodal import (
-        follow_document_dir,
-    )
-
-    drop = tmp_path / "drop"
-    drop.mkdir()
-    (drop / "a.pdf").write_bytes(make_simple_pdf(["doc a text"]))
-    (drop / "skipme.txt").write_text("not matched by the glob")
-    out = str(tmp_path / "out")
-    ck = str(tmp_path / "ck")
-
-    def run_once():
-        q = (
-            follow_document_dir(spark, str(drop))
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        time.sleep(0.2)
-
-    run_once()
-    got = spark.read.parquet(out)
-    rows = {r["path"].split("/")[-1]: r for r in got.collect()}
-    assert set(rows) == {"a.pdf"}
-    assert rows["a.pdf"]["decode_ok"] and "doc a" in rows["a.pdf"]["text"]
-
-    (drop / "b.pdf").write_bytes(make_simple_pdf(["doc b", "page 2"]))
-    (drop / "c.pdf").write_bytes(b"damaged not a pdf")
-    run_once()
-    rows = {
-        r["path"].split("/")[-1]: r
-        for r in spark.read.parquet(out).collect()
-    }
-    assert set(rows) == {"a.pdf", "b.pdf", "c.pdf"}
-    assert rows["b.pdf"]["n_pages"] == 2
-    assert rows["c.pdf"]["decode_ok"] is False  # in-stream quarantine

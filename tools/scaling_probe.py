@@ -50,26 +50,21 @@ PROBES = [
     ("lr_classifier", "documents (2-step integer-grid GD + score + calibration)", 10),
     ("x_lr_train3", "documents (hashed feats, 3 GD epochs + score)", 10),
     ("x_html_extract", "documents as WARC-response HTML (8 gz shards) — input verified consumed in full: 10.0x records, 9.9x decompressed bytes, row-count-asserted vs documents (test_crawl_pipeline.py)", 10),
-    ("x_video_frames", "embeddings ids x AVI/GIF/Y4M pool", 10),
     ("x_sketch_state", "events (HLL+KLL+theta build/merge cycles)", 100),
     ("x_text_normalize", "documents (mojibake+NFKC+collapse, digested)", 10),
     ("bpe_encode", "documents (bpe + wordpiece longest-match legs)", 10),
-    ("x_flac_ingest", "embeddings ids x 32 FLAC clips (fixed2+rice)", 10),
     ("lm_perplexity", "documents (bucket LM + CCNet split + KN train/score + dsir legs r9)", 10),
     ("x_cdc_dedup", "documents (content-defined chunk dedup)", 10),
-    ("x_pdf_ingest", "embeddings ids x 32 four-page Flate PDFs", 10),
     ("x_pagerank", "lineitem⋈orders host graph, 3 damped rounds", 100),
     ("x_harmonic", "host graph + reverse edges, HyperBall radius 3", 100),
     ("doc_chunks", "documents (chunks + chat + aug/neg legs)", 10),
     ("webgraph_rank", "documents planted-URL host graph, 2 exact PR rounds (+dom legs r9, +tri legs r10)", 10),
     ("crawl_bitext", "documents (robots audit + bitext mining)", 10),
-    ("x_mp3_structure", "embeddings ids x 16 40-frame MP3 streams", 10),
     ("x_preference_pairs", "documents as scored pool -> pairs -> 5 BT rounds", 10),
     ("x_entity_resolution", "documents + typo plants (block->lev->resolve->audit) — MATCH SPACE grows 10.5x (228->2402 gated pairs, 193->2060 resolutions; the templated corpus's clique sizes), so the wall is sub-output-linear", 10),
     ("x_setsim_join", "documents half-sample, exact jaccard>=0.9 — OUTPUT grows 110x (2.1k->236k true pairs, clique-quadratic corpus): wall is sub-output-linear", 10),
     ("x_doremi_mix", "documents scored pool -> EG loop -> mix", 10),
     ("x_quality_dedup", "documents x planted clusters, keep-best survivor", 10),
-    ("x_video_structure", "embeddings ids x 16 Annex-B/MP4 streams", 10),
     # round-9 oracle keys
     ("semantic_dedup", "embeddings (sem cells + pqcode/pqtrain one-time legs r9)", 10),
     ("containment_join", "documents %32 probe vs full table, t=0.9 words — OUTPUT grows 107x at 10x docs (2.4k->262k containment pairs, gate-counted; clique-heavy corpus): the wall is sub-output-linear", 10),
