@@ -1029,25 +1029,6 @@ def _extra_ops():
             margin_threshold=1.0,
         )
 
-    def corpus_overlap_minhash_bench(spark, sf_dir):
-        """Corpus-overlap MinHash estimator at scale: per-source 64-perm
-        signatures in ONE group-keyed aggregate (state = 64 longs per
-        corpus regardless of size), pair agreements through the
-        (permutation, min) equi-join — the 100 TB path whose exact twin
-        is the oracle-gated corpus_overlap key.  Restored in the
-        round-11 optimization pass: the promotion onto corpus_overlap
-        retired this entry, but the bench contract forbids removing
-        query names — the standalone timing continues alongside the
-        carrier's 'est' leg."""
-        from buildkite_logs_parquet_spark.operators.dedup import (
-            corpus_overlap_minhash,
-        )
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return corpus_overlap_minhash(
-            docs, "source", "text", num_perm=64, shingle_k=12
-        )
-
     def funnel_times_bench(spark, sf_dir):
         """Per-user funnel completion detail (windowed variant): the
         three-step earliest-completion chain plus the k-1 left-join
@@ -1115,7 +1096,6 @@ def _extra_ops():
 
     return {
         "x_event_transitions": event_transitions_bench,
-        "x_corpus_overlap_est": corpus_overlap_minhash_bench,
         "x_funnel_times": funnel_times_bench,
         "x_embedding_outliers": embedding_outliers_bench,
         "x_preference_pairs": preference_bench,

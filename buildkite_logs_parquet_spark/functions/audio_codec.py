@@ -1,25 +1,27 @@
-"""Pure-stdlib WAV codec (PCM + IMA ADPCM) — the audio twin of
-``image_codec`` (PNG/PPM): a REAL decode path behind the multimodal
-seam built only from public, always-available pieces (bytes + numpy),
-so the Spark-side plumbing can be exercised on genuine media bytes
-without external codec libraries.
+"""Pure-Python WAV codec (bytes + numpy, no external codec library).
 
-Two encodings are handled natively:
+``decode_wav`` walks the RIFF/WAVE chunks itself, because the stdlib
+``wave`` module reads only PCM, and returns ``(sample_rate, samples)``
+with int16 samples shaped ``(n_frames, n_channels)``.  It decodes:
 
 * **PCM** (format tag 0x0001): 16-bit signed and 8-bit unsigned
   (rescaled to int16) — lossless.
+* **G.711** A-law (0x0006) and mu-law (0x0007), through 256-entry
+  lookup tables.
 * **IMA ADPCM** (format tag 0x0011, a.k.a. DVI ADPCM): a real
   COMPRESSED audio format — 4 bits/sample, per-block predictor +
   step-index header, the standard IMA step/index tables.  Mono only
   (stereo ADPCM interleaves 4-byte groups per channel; raises
-  ``NotImplementedError``).  The matching encoder exists so tests can
-  round-trip; ADPCM is lossy, so round-trips assert reconstruction
-  error bounds plus exact decode of hand-pinned nibble streams.
+  ``NotImplementedError``).
 
-The stdlib ``wave`` module only reads PCM, so the RIFF/WAVE chunk walk
-is implemented directly (same RIFF rules as ``avi_codec``).  Formats
-beyond these (MP3, FLAC, Ogg…) remain the honest ``strict_decode``
-seam in ``operators/multimodal``.
+Any other format tag raises ``ValueError``.  ``encode_wav`` (16-bit
+PCM) and ``encode_wav_ima_adpcm`` are the inverses, so tests can
+round-trip; ADPCM is lossy, so round-trips assert reconstruction error
+bounds plus exact decode of hand-pinned nibble streams.
+
+``decode_audio`` picks the decoder from the magic bytes (RIFF →
+``decode_wav``, ``fLaC`` → ``flac_codec.decode_flac``), and
+``mp3_info`` reads MP3 frame headers without decoding any audio.
 """
 
 from __future__ import annotations
@@ -267,9 +269,8 @@ def encode_wav_ima_adpcm(
 
 
 def decode_audio(data: bytes) -> tuple[int, np.ndarray]:
-    """Format-sniffing audio decode — the single entry the multimodal
-    stage calls: RIFF/WAVE → ``decode_wav`` (PCM / IMA ADPCM), ``fLaC``
-    → ``flac_codec.decode_flac`` (the archival format speech corpora
+    """Format-sniffing audio decode: RIFF/WAVE → ``decode_wav`` (PCM /
+    IMA ADPCM), ``fLaC`` → ``flac_codec.decode_flac`` (the archival format speech corpora
     actually ship).  Returns ``(sample_rate, samples int16 (n, ch))``;
     FLAC depths ≠ 16 are rescaled to the int16 grid (feature extraction
     is scale-normalized anyway).  Unknown magics raise ValueError — the

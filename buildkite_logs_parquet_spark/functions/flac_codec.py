@@ -4,8 +4,8 @@ audio rung of the codec ladder.
 Speech corpora ship FLAC (LibriSpeech and its descendants distribute
 ``.flac`` exclusively), so a training-data pipeline that ingests audio
 crawls needs it decoded on the executor with no external codec
-dependency — the same policy as the PNG/JPEG/GIF/WAV codecs beside
-this module: bytes + numpy only, deterministic, quarantine-friendly
+dependency — the same policy as the WAV codec beside this module:
+bytes + numpy only, deterministic, quarantine-friendly
 (malformed streams raise ``ValueError``; features the format allows
 but this subset doesn't cover raise ``NotImplementedError``).
 

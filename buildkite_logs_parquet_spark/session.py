@@ -24,7 +24,15 @@ def get_spark(
     cluster, pass ``master=None`` with a pre-set spark-submit master and a
     larger ``shuffle_partitions`` (rule of thumb: 2-3x total cores, sized so
     post-shuffle partitions are 100-200 MB).
+
+    If this thread already has an active session, it is returned as is:
+    no argument here, and no default above, is applied to it.  A builder's
+    ``getOrCreate`` would otherwise reset runtime confs such as
+    ``spark.sql.shuffle.partitions`` on a session its caller set up.
     """
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
         master = f"local[{cpus}]"

@@ -1,7 +1,10 @@
 """Every import of the library, anywhere in the checkout, names a module
 that exists.  ``bench.py``'s builders and many tests import inside
 functions, so a deleted module would otherwise surface only halfway
-through a bench run or in one test's body."""
+through a bench run or in one test's body.
+
+Every library module is reached from the registry, the CLI or the
+benchmark, or is listed here as a test-only surface."""
 
 from __future__ import annotations
 
@@ -14,6 +17,23 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parent.parent
 PKG = "buildkite_logs_parquet_spark"
 sys.path.insert(0, str(ROOT))
+
+#: Library modules that no registered key, CLI command, benchmark
+#: workload or ``bench.py`` key imports: only their tests do.
+TEST_ONLY = {
+    "functions.audio_codec",
+    "functions.flac_codec",
+    "functions.mp3_codec",
+    "plans",
+    "plans.checks",
+    "sources.bk_datasource",
+    "sources.csv_source",
+    "sources.notebook",
+    "sources.tail_source",
+    "sources.webdataset",
+    "streaming",
+    "streaming.follow",
+}
 
 
 def _sources() -> list[Path]:
@@ -62,3 +82,58 @@ def test_every_library_import_resolves():
         if not _resolves(module, name)
     )
     assert dangling == []
+
+
+def _module_name(path: Path) -> str:
+    parts = path.relative_to(ROOT).with_suffix("").parts
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+def _module_path(module: str) -> Path | None:
+    rel = ROOT.joinpath(*module.split("."))
+    for path in (rel / "__init__.py", rel.with_suffix(".py")):
+        if path.is_file():
+            return path
+    return None
+
+
+def _with_packages(module: str):
+    """``module`` and every package that importing it loads first."""
+    parts = module.split(".")
+    for i in range(1, len(parts) + 1):
+        yield ".".join(parts[:i])
+
+
+def _reach(roots: list[Path]) -> set[str]:
+    """Library modules that importing or running ``roots`` can load."""
+    seen: set[str] = set()
+    todo: list[Path] = []
+
+    def load(module: str) -> None:
+        for m in _with_packages(module):
+            path = _module_path(m)
+            if m not in seen and path is not None:
+                seen.add(m)
+                todo.append(path)
+
+    for root in roots:
+        if root.is_relative_to(ROOT / PKG):
+            load(_module_name(root))
+        else:
+            todo.append(root)
+    while todo:
+        for module, name in _library_imports(todo.pop()):
+            load(module)
+            if name is not None:
+                load(f"{module}.{name}")
+    return seen
+
+
+def test_library_outside_the_reach_is_listed_as_test_only():
+    roots = [ROOT / "__spark_entry__.py", ROOT / PKG / "cli.py"]
+    roots += sorted((ROOT / "perfbench").glob("*.py"))
+    reached = _reach(roots)
+    library = {_module_name(p) for p in (ROOT / PKG).rglob("*.py")}
+    unreached = {m.removeprefix(f"{PKG}.") for m in library - reached}
+    assert unreached == TEST_ONLY
+    assert sorted(_reach([ROOT / "bench.py"]) - reached) == []
